@@ -108,7 +108,7 @@ def main() -> int:
     scratch = ROOT / ".perfbench_run" / f"{args.workload}-s{args.seed}-{os.getpid()}"
     shutil.rmtree(scratch, ignore_errors=True)
     (scratch / "tmp").mkdir(parents=True)
-    (scratch / "local").mkdir()
+    (scratch / "local" / "jvm").mkdir(parents=True)
     cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
     env = dict(os.environ)
     env.update(
@@ -116,6 +116,9 @@ def main() -> int:
         SPARK_DRIVER_MEMORY=driver_memory(),
         TMPDIR=str(scratch / "tmp"),
         SPARK_LOCAL_DIRS=str(scratch / "local"),
+        # the JVM writes no perf data, and its temp files (native libs,
+        # artifact dirs) go with Spark's scratch, not into TMPDIR
+        JAVA_TOOL_OPTIONS=f"-XX:-UsePerfData -Djava.io.tmpdir={scratch / 'local' / 'jvm'}",
         PYTHONPATH=os.pathsep.join([str(ROOT), str(HERE)]),
     )
     env.pop("OMP_NUM_THREADS", None)
