@@ -155,12 +155,6 @@ class PriceListSequence:
         self.rng.shuffle(ids)
         return self.text(self._take(ids)), len(ids)
 
-    def fresh_file(self, rows: int) -> tuple[str, int]:
-        """(CSV text, row count) of a file of ``rows`` new products."""
-        ids = list(range(self.next_id, self.next_id + rows))
-        self.next_id += rows
-        return self.text(self._take(ids)), rows
-
     def expected(self, sample: int = 64) -> dict:
         """Counts and a Price digest over a seeded sample of products."""
         ids = sorted(random.Random(self.seed ^ 0x5EED).sample(sorted(self.prices),

@@ -64,8 +64,8 @@ class Counters:
                     n += info.numCompletedTasks + info.numFailedTasks
             s["tasks"] = n
 
-    def heap_after_gc_mb(self, rounds: int = 8) -> float:
-        """Heap in use after forced full GCs: the least of ``rounds``.
+    def heap_after_gc_mb(self) -> float:
+        """Heap in use after forced full GCs: the least of eight rounds.
 
         One GC is not enough.  Python's collector must first drop the
         py4j proxies that pin JVM objects, and each JVM GC lets Spark's
@@ -73,7 +73,7 @@ class Counters:
         then frees.  After an ingest run the reading took about three
         seconds of such rounds to settle (137 MB to 93 MB)."""
         least = float("inf")
-        for _ in range(rounds):
+        for _ in range(8):
             gc.collect()
             self.sc._jvm.java.lang.System.gc()
             used = self._mgmt.getMemoryMXBean().getHeapMemoryUsage().getUsed()
