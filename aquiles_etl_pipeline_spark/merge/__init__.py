@@ -3,7 +3,6 @@ from .upserts import (
     ensure_units_of_measure,
     merge_provider_products,
     merge_providers,
-    merge_products,
     merge_staging_to_fact_tables,
 )
 from .warehouse import Warehouse
@@ -15,6 +14,5 @@ __all__ = [
     "ensure_units_of_measure",
     "merge_provider_products",
     "merge_providers",
-    "merge_products",
     "merge_staging_to_fact_tables",
 ]

@@ -30,7 +30,7 @@ column names — ``F.col("price")``, not ``F.col("_src_price")``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .schemas import N_BUCKETS
@@ -56,7 +56,6 @@ def merge_into(
     insert: bool = True,
     insert_values: dict[str, Column] | None = None,
     bucket_col: str | None = None,
-    collect_stats: bool = True,
 ) -> dict[str, int]:
     """Execute a MERGE INTO ``table`` from ``source`` keyed on ``on``.
 
@@ -81,7 +80,8 @@ def merge_into(
     two source rows makes UPDATE semantics ambiguous, so the merge
     REFUSES (the Delta ``MERGE`` multiple-match error) instead of
     picking one nondeterministically.  Returns counts
-    {updated, deleted, inserted} (-1s when ``collect_stats=False``).
+    {updated, deleted, inserted}, observed on the write job itself
+    (``Observation`` metrics, no extra action).
     """
     keys = [on] if isinstance(on, str) else list(on)
     target = wh.read(table)
@@ -218,6 +218,18 @@ def merge_into(
         else F.lit(True)
     )
 
+    # Counts ride on the write job.  An Observation reports only to the
+    # session of the frame it is attached to, and the source may belong
+    # to another one (a foreachBatch micro-batch), so both sit on frames
+    # of the target's session, the one the write runs in: the scoped
+    # target rows here, every written row below.
+    scoped = Observation()
+    joined = joined.observe(
+        scoped,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(do_delete).alias("deleted"),
+        F.count_if(do_update & ~do_delete).alias("updated"),
+    )
     survivors = joined.where(~do_delete).select(
         *[
             (
@@ -247,25 +259,19 @@ def merge_into(
                 proj.append(_bucket_expr(keys).alias(c))
             else:
                 proj.append(F.lit(None).cast(field.dataType).alias(c))
-        inserts = ins_src.select(*proj)
-        final = survivors.unionByName(inserts)
+        final = survivors.unionByName(ins_src.select(*proj))
     else:
-        inserts = None
         final = survivors
-
-    stats = {"updated": -1, "deleted": -1, "inserted": -1}
-    if collect_stats:
-        row = joined.agg(
-            F.coalesce(F.sum(do_delete.cast("int")), F.lit(0)).alias("d"),
-            F.coalesce(
-                F.sum((do_update & ~do_delete).cast("int")), F.lit(0)
-            ).alias("u"),
-        ).first()
-        stats["deleted"], stats["updated"] = int(row["d"]), int(row["u"])
-        stats["inserted"] = int(inserts.count()) if inserts is not None else 0
+    written = Observation()
+    final = final.observe(written, F.count(F.lit(1)).alias("rows"))
 
     if bucket_col is not None:
         wh.replace_partitions(table, final, bucket_col, touched)
     else:
         wh.overwrite(table, final)
-    return stats
+    seen = scoped.get
+    return {
+        "updated": seen["updated"],
+        "deleted": seen["deleted"],
+        "inserted": written.get["rows"] - (seen["rows"] - seen["deleted"]),
+    }

@@ -23,6 +23,11 @@ the same batch_guid converges to the same table state — that is this
 engine's substitute for the reference's single cross-table SQL
 transaction (etl:171), which Delta/parquet cannot express.
 
+Stats: M1 and U1 count their new rows before writing (the count gates
+the write).  M2 and M3 report ``inserted`` and ``total_source`` through
+an ``Observation`` on the frame their write job computes, so the counts
+cost no job of their own.
+
 Scale: staging batches are file-sized (small); every staging-vs-fact
 join broadcasts the staging side.  Fact rewrites become Delta MERGE
 file-level rewrites on a real cluster (see warehouse.py seam).
@@ -30,7 +35,7 @@ file-level rewrites on a real cluster (see warehouse.py seam).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -45,64 +50,43 @@ def _bucket_of(*key_cols: str) -> F.Column:
     return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")
 
 
-def _next_ids(
-    existing: DataFrame, new_rows: DataFrame, order_col: str, small: bool = True
-) -> DataFrame:
+def _next_ids(existing: DataFrame, new_rows: DataFrame, order_col: str) -> DataFrame:
     """Assign sequential Ids to new_rows above max(existing.Id),
     ordered by order_col.
 
-    ``small=True`` (the default, and what every staging merge uses —
-    inserts are batch-sized by construction): one single-partition
-    window, ONE stage.  The range-sampling two-phase path below costs
-    ~4 tiny stages of pure scheduler overhead on a few-hundred-row
-    batch, which dominated r01's q41 profile.
-
-    ``small=False`` — bulk-backfill path: scalable two-phase numbering
-    with no global single-partition window: range-repartition by
-    order_col so partitions are globally ordered key ranges, row_number
-    within each partition, then shift by per-partition offsets (a
-    running sum over the partition-count frame, which has at most
-    #partitions rows).  Delta GENERATED ALWAYS AS IDENTITY replaces
-    both on a real cluster."""
-    if small:
-        # max(Id) rides along as a broadcast 1-row cross join instead of
-        # a .collect(): one fewer driver round-trip per merge, and the
-        # whole id assignment stays a single lazy plan
-        maxdf = existing.agg(
-            F.coalesce(F.max("Id"), F.lit(0)).cast("long").alias("_maxid")
-        )
-        w = Window.partitionBy(F.lit(1)).orderBy(order_col)
-        return (
-            new_rows.coalesce(1)
-            .crossJoin(F.broadcast(maxdf))
-            .withColumn("Id", (F.col("_maxid") + F.row_number().over(w)).cast("long"))
-            .drop("_maxid")
-        )
-    max_id = (existing.agg(F.coalesce(F.max("Id"), F.lit(0)).alias("m")).collect())[0]["m"]
-    local = (
-        new_rows.repartitionByRange(F.col(order_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(order_col)))
+    Inserts are batch-sized by construction, so this is one
+    single-partition window: ONE stage.  max(Id) rides along as a
+    broadcast 1-row cross join instead of a .collect(): one fewer driver
+    round-trip per merge, and the whole id assignment stays a single
+    lazy plan.  Delta GENERATED ALWAYS AS IDENTITY replaces it on a
+    real cluster."""
+    maxdf = existing.agg(
+        F.coalesce(F.max("Id"), F.lit(0)).cast("long").alias("_maxid")
     )
-    offsets = (
-        local.groupBy("_pid")
-        .agg(F.max("_rn").alias("_cnt"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", "_off")
-    )
+    w = Window.partitionBy(F.lit(1)).orderBy(order_col)
     return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn("Id", (F.lit(max_id) + F.col("_off") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_off")
+        new_rows.coalesce(1)
+        .crossJoin(F.broadcast(maxdf))
+        .withColumn("Id", (F.col("_maxid") + F.row_number().over(w)).cast("long"))
+        .drop("_maxid")
     )
+
+
+def _observed(merged: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach M2/M3's row counts to the frame their write job computes.
+
+    ``_op`` is 1 on a target row the source matched, 2 on an inserted
+    row and NULL on a carried-forward row; it is dropped before the
+    write.  The Observation sits above any persisted frame, so only the
+    merge's own write job evaluates it (a cache filled by a concurrent
+    job can neither double nor short the count)."""
+    obs = Observation()
+    observed = merged.observe(
+        obs,
+        F.count_if(F.col("_op") == 2).alias("inserted"),
+        F.count("_op").alias("total_source"),
+    )
+    return observed.drop("_op"), obs
 
 
 def _staging_batch(wh: Warehouse, table: str, batch_guid: str) -> DataFrame:
@@ -111,12 +95,10 @@ def _staging_batch(wh: Warehouse, table: str, batch_guid: str) -> DataFrame:
     return wh.read(table).where(F.col("BatchGuid") == batch_guid)
 
 
-def merge_providers(wh: Warehouse, batch_guid: str, collect_stats: bool = True) -> int:
-    """M1: insert staging provider names that match no provider and no synonym.
-
-    ``collect_stats=False`` writes in ONE job (no persist+count gate) —
-    the dim is tiny, so an occasional no-new-rows rewrite is cheaper
-    than a second action over the anti-join chain every batch."""
+def merge_providers(wh: Warehouse, batch_guid: str) -> int:
+    """M1: insert staging provider names that match no provider and no
+    synonym.  Returns the number inserted; the table is rewritten only
+    when that is non-zero."""
     staging = _staging_batch(wh, "staging_provider", batch_guid).select("Name").distinct()
     provider = wh.read("provider")
     synonyms = wh.read("provider_synonym")
@@ -132,9 +114,6 @@ def merge_providers(wh: Warehouse, batch_guid: str, collect_stats: bool = True) 
     new_rows = _next_ids(provider, new_names, "Name").select(
         "Id", "Name", F.current_timestamp().alias("CreateDt")
     )
-    if not collect_stats:
-        wh.overwrite("provider", provider.unionByName(new_rows))
-        return -1
     # batch-sized: persist so the count gate and the write share one
     # materialization instead of re-running the anti-join chain
     new_rows = new_rows.persist()
@@ -145,11 +124,11 @@ def merge_providers(wh: Warehouse, batch_guid: str, collect_stats: bool = True) 
     return n
 
 
-def ensure_units_of_measure(wh: Warehouse, batch_guid: str, collect_stats: bool = True) -> int:
+def ensure_units_of_measure(wh: Warehouse, batch_guid: str) -> int:
     """U1 (docs/ETL_ENHANCEMENTS.md:23): create unseen units before the
     product merge; acronym aliases (UnitOfMeasureAcronym) resolve to
-    existing units and are not duplicated.  ``collect_stats=False``
-    writes in one job (see merge_providers)."""
+    existing units and are not duplicated.  Count-gated like
+    :func:`merge_providers`."""
     staging = (
         _staging_batch(wh, "staging_product", batch_guid)
         .select(F.lower(F.col("UnitOfMeasure")).alias("Acronym"))
@@ -165,9 +144,6 @@ def ensure_units_of_measure(wh: Warehouse, batch_guid: str, collect_stats: bool 
     new_rows = _next_ids(uom, unseen, "Acronym").select(
         "Id", "Acronym", F.col("Acronym").alias("Name")
     )
-    if not collect_stats:
-        wh.overwrite("unit_of_measure", uom.unionByName(new_rows))
-        return -1
     new_rows = new_rows.persist()
     n = new_rows.count()
     if n:
@@ -195,9 +171,9 @@ def _resolve_uom(wh: Warehouse, df: DataFrame, unit_col: str) -> DataFrame:
 
 
 def prepare_product_source(wh: Warehouse, batch_guid: str) -> tuple[DataFrame, list[int]]:
-    """M2's staging-side prep, factored out so the orchestrator can run
-    it CONCURRENTLY with M1/U1 (it reads only the staging partition —
-    no dependency on providers or units): dedup the batch by
+    """M2's staging-side prep, factored out so the chain can run it
+    CONCURRENTLY with M1/U1 (it reads only the staging partition — no
+    dependency on providers or units): dedup the batch by
     DescriptionHash, persist it, and collect the touched fact-table
     buckets (the one driver round-trip the partition-scoped rewrite
     needs before it can prune its read)."""
@@ -232,35 +208,36 @@ def prepare_product_source(wh: Warehouse, batch_guid: str) -> tuple[DataFrame, l
 
 
 class _ProductMergePlan:
-    """Lazy M2 merge result, split from its commit so the orchestrator
-    can overlap M2's write with M3 (which needs only the Id↔hash
-    mapping carried by ``final``, not the durable parquet)."""
+    """Lazy M2 merge result, split from its commit so the chain can
+    overlap M2's write with M3 (which needs only the Id↔hash mapping
+    carried by ``final``, not the durable parquet).  ``final`` is
+    persisted: M3's mapping and M2's write share one materialization."""
 
-    __slots__ = ("final", "touched", "src0", "src", "new_rows")
+    __slots__ = ("final", "touched", "_pinned")
 
-    def __init__(self, final, touched, src0, src, new_rows):
+    def __init__(self, final, touched, pinned):
         self.final = final
         self.touched = touched
-        self.src0 = src0
-        self.src = src
-        self.new_rows = new_rows
+        self._pinned = pinned
 
     def release(self) -> None:
-        for df in (self.final, self.src, self.src0):
+        for df in self._pinned:
             df.unpersist()
 
 
 def plan_product_merge(
-    wh: Warehouse,
-    batch_guid: str,
-    prepared: tuple[DataFrame, list[int]] | None = None,
-    persist_mapping: bool = False,
+    wh: Warehouse, src0: DataFrame, touched: list[int]
 ) -> _ProductMergePlan:
-    """Build M2's merged-table lineage (see :func:`merge_products` for
-    the contract) without writing.  ``persist_mapping=True`` persists
-    the final frame so a concurrent M3 and the commit's write job share
-    one materialization."""
-    src0, touched = prepared if prepared is not None else prepare_product_source(wh, batch_guid)
+    """M2: upsert keyed on DescriptionHash = sha256(Description)
+    (identity implied by the IX_Product_DescriptionHash index,
+    core/entities.py:106). Matched → update Measure/UnitOfMeasureId/
+    UpdatedDt ('update existing ones with latest data',
+    docs/ETL_ENHANCEMENTS.md:28); not matched → insert.
+
+    Builds the merged touched-bucket lineage from
+    :func:`prepare_product_source`'s output without writing.  Unit
+    resolution stays lazy (it must see U1's units), riding inside the
+    write job's broadcast joins instead of costing its own action."""
     # persist (lazily — the write job's first broadcast build fills the
     # cache) so the matched join, the insert anti-join, and the id
     # assignment don't each re-run the two uom-resolution joins
@@ -280,6 +257,7 @@ def plan_product_merge(
                 F.col("UnitPrice").alias("_new_unit_price"),
                 F.col("Measure").cast("decimal(18,2)").alias("_new_measure"),
                 F.col("UnitOfMeasureId").alias("_new_uom_id"),
+                F.lit(1).alias("_op"),
             )
         ),
         "DescriptionHash",
@@ -297,6 +275,7 @@ def plan_product_merge(
         .alias("UpdatedDt"),
         "DescriptionHash",
         "_bucket",
+        "_op",
     )
 
     inserts_src = src.join(
@@ -312,21 +291,17 @@ def plan_product_merge(
         now.alias("UpdatedDt"),
         "DescriptionHash",
         _bucket_of("DescriptionHash").alias("_bucket"),
+        F.lit(2).alias("_op"),
     )
-    final = updated.unionByName(new_rows)
-    if persist_mapping:
-        final = final.persist()
-    return _ProductMergePlan(final, touched, src0, src, new_rows)
+    final = updated.unionByName(new_rows).persist()
+    return _ProductMergePlan(final, touched, (final, src, src0))
 
 
-def commit_product_merge(
-    wh: Warehouse, plan: _ProductMergePlan, collect_stats: bool = True, release: bool = True
-) -> dict[str, int]:
+def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, int]:
     """Write M2's merged touched-bucket content (untouched partitions
-    hardlink forward).  ``release=False`` keeps the plan's caches alive
-    for a concurrent M3 still reading ``plan.final``."""
-    n_ins = plan.new_rows.count() if collect_stats else -1
-    final = plan.final
+    hardlink forward).  The plan's caches stay alive for a concurrent
+    M3 still reading ``plan.final``; the caller releases them."""
+    final, obs = _observed(plan.final)
     if not plan.touched:
         # bootstrap batch (empty target): the insert side rides the
         # single-partition id window, so the partitioned write would
@@ -337,55 +312,24 @@ def commit_product_merge(
         # blanket repartition costs more than it saves there).
         final = final.repartition(8, "_bucket")
     wh.replace_partitions("product", final, "_bucket", plan.touched)
-    n_src = plan.src0.count() if collect_stats else -1
-    if release:
-        plan.release()
-    return {"inserted": n_ins, "total_source": n_src}
-
-
-def merge_products(
-    wh: Warehouse,
-    batch_guid: str,
-    collect_stats: bool = True,
-    prepared: tuple[DataFrame, list[int]] | None = None,
-) -> dict[str, int]:
-    """M2: upsert keyed on DescriptionHash = sha256(Description)
-    (identity implied by the IX_Product_DescriptionHash index,
-    core/entities.py:106). Matched → update Measure/UnitOfMeasureId/
-    UpdatedDt ('update existing ones with latest data',
-    docs/ETL_ENHANCEMENTS.md:28); not matched → insert.
-
-    ``prepared`` is the output of :func:`prepare_product_source` when
-    the orchestrator overlapped the prep with M1/U1; unit resolution
-    stays lazy here (it must see U1's units), riding inside the write
-    job's broadcast joins instead of costing its own action."""
-    return commit_product_merge(
-        wh, plan_product_merge(wh, batch_guid, prepared), collect_stats
-    )
+    return obs.get
 
 
 def merge_provider_products(
-    wh: Warehouse,
-    batch_guid: str,
-    collect_stats: bool = True,
-    product_mapping: DataFrame | None = None,
+    wh: Warehouse, batch_guid: str, products: DataFrame
 ) -> dict[str, int]:
     """M3: resolve placeholder FKs from denormalized staging names
     (etl:151-152), then upsert keyed on (ProductId, ProviderId) —
     'insert new relationships, update existing ones'
     (docs/ETL_ENHANCEMENTS.md:29).
 
-    ``product_mapping`` (Id, DescriptionHash): when the orchestrator
-    overlaps M3 with M2's write, it passes M2's in-memory merged frame —
-    every staged description's bucket is in M2's touched set by
-    construction, so the mapping is complete without waiting for (or
-    re-reading) the product parquet."""
+    ``products`` (Id, DescriptionHash, ...) is M2's in-memory merged
+    frame (``plan.final``), so M3 overlaps M2's write instead of
+    waiting for (or re-reading) the product parquet: every staged
+    description's bucket is in M2's touched set by construction, so
+    the mapping is complete."""
     staging = _staging_batch(wh, "staging_provider_product", batch_guid)
-    product = (
-        product_mapping
-        if product_mapping is not None
-        else wh.read("product")
-    ).select(F.col("Id").alias("_product_id"), "DescriptionHash")
+    product = products.select(F.col("Id").alias("_product_id"), "DescriptionHash")
     provider = wh.read("provider").select(F.col("Id").alias("_provider_id"), "Name")
     synonyms = wh.read("provider_synonym").select(
         "Synonym", F.col("ProviderId").alias("_syn_provider_id")
@@ -433,7 +377,7 @@ def merge_provider_products(
     pp = wh.read("provider_product")
     base = pp.where(F.col("_bucket").isin(touched))
     matched = base.alias("t").join(
-        F.broadcast(src.alias("s")),
+        F.broadcast(src.withColumn("_op", F.lit(1)).alias("s")),
         (F.col("t.ProductId") == F.col("s.ProductId"))
         & (F.col("t.ProviderId") == F.col("s.ProviderId")),
         "left",
@@ -448,6 +392,7 @@ def merge_provider_products(
         F.coalesce(F.col("s.IVA"), F.col("t.IVA")).alias("IVA"),
         F.coalesce(F.col("s.Price"), F.col("t.Price")).alias("Price"),
         F.col("t._bucket").alias("_bucket"),
+        F.col("s._op"),
     )
     inserts_src = src.alias("s").join(
         base.select("ProductId", "ProviderId").alias("t"),
@@ -458,17 +403,16 @@ def merge_provider_products(
         "Id", "ProductId", "ProviderId", "IsValidated", "LastReviewDt",
         "PackageUnits", "IVA", "Price",
         _bucket_of("ProductId", "ProviderId").alias("_bucket"),
+        F.lit(2).alias("_op"),
     )
-    n_ins = new_rows.count() if collect_stats else -1
-    merged = updated.unionByName(new_rows)
+    merged, obs = _observed(updated.unionByName(new_rows))
     if not touched:
         # bootstrap fast path: parallelize the single-task partitioned
         # write (see commit_product_merge)
         merged = merged.repartition(8, "_bucket")
     wh.replace_partitions("provider_product", merged, "_bucket", touched)
-    n_src = src.count() if collect_stats else -1
     src.unpersist()
-    return {"inserted": n_ins, "total_source": n_src}
+    return obs.get
 
 
 def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:
@@ -478,9 +422,7 @@ def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:
         wh.delete_partition(t, "BatchGuid", batch_guid)
 
 
-def merge_staging_to_fact_tables(
-    wh: Warehouse, batch_guid: str, collect_stats: bool = True
-) -> dict[str, object]:
+def merge_staging_to_fact_tables(wh: Warehouse, batch_guid: str) -> dict[str, object]:
     """etl:168-189 — the three merges + cleanup, honoring the reference's
     dependency order: M1 (providers) and U1 (units) touch disjoint
     tables and staging partitions, so they submit CONCURRENTLY — along
@@ -489,23 +431,19 @@ def merge_staging_to_fact_tables(
     its write job after U1 lands.  M3 (provider_products) needs M1's
     providers and M2's *merged rows* — not the durable product parquet —
     so M2's write and the whole of M3 overlap, sharing M2's persisted
-    final frame as the Id↔DescriptionHash mapping.
-    ``collect_stats=False`` skips the stats-only count jobs and writes
-    dims in one job each."""
+    final frame as the Id↔DescriptionHash mapping."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_prov = pool.submit(merge_providers, wh, batch_guid, collect_stats)
-        f_units = pool.submit(ensure_units_of_measure, wh, batch_guid, collect_stats)
+        f_prov = pool.submit(merge_providers, wh, batch_guid)
+        f_units = pool.submit(ensure_units_of_measure, wh, batch_guid)
         f_prep = pool.submit(prepare_product_source, wh, batch_guid)
-        providers, units, prepared = f_prov.result(), f_units.result(), f_prep.result()
-    plan = plan_product_merge(wh, batch_guid, prepared=prepared, persist_mapping=True)
+        providers, units, (src0, touched) = f_prov.result(), f_units.result(), f_prep.result()
+    plan = plan_product_merge(wh, src0, touched)
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_m2 = pool.submit(commit_product_merge, wh, plan, collect_stats, False)
-            f_m3 = pool.submit(
-                merge_provider_products, wh, batch_guid, collect_stats, plan.final
-            )
+            f_m2 = pool.submit(commit_product_merge, wh, plan)
+            f_m3 = pool.submit(merge_provider_products, wh, batch_guid, plan.final)
             products, provider_products = f_m2.result(), f_m3.result()
     finally:
         # release even when a merge fails: the persisted final/src

@@ -533,9 +533,11 @@ class Warehouse:
             cur_fields = {f.name: f.dataType for f in cur_schema.fields}
             new_fields = {f.name: f.dataType for f in df.schema.fields}
             if cur_fields != new_fields or self._partition_spec(cur) != list(partition_by or []):
+                # df on the left: the rewrite then runs in df's session,
+                # where Observations on df (staging's row counts) report
                 self.overwrite(
                     name,
-                    self.read(name).unionByName(df, allowMissingColumns=True),
+                    df.unionByName(self.read(name), allowMissingColumns=True),
                     partition_by=partition_by,
                 )
                 return

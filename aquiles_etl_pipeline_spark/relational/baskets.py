@@ -31,23 +31,6 @@ def distinct_order_parts(li: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def capped_basket_parts(
-    li: DataFrame, min_size: int = 2, max_size: int = 16
-) -> DataFrame:
-    """``(ord, part)`` rows restricted to baskets whose DISTINCT part
-    count lies in ``[min_size, max_size]`` — the eligible-basket table
-    that co-purchase pair expansions and degree rollups both consume.
-    """
-    op = distinct_order_parts(li)
-    bs = op.groupBy("ord").agg(F.count(F.lit(1)).alias("sz"))
-    return op.join(
-        bs.where(
-            (F.col("sz") >= min_size) & (F.col("sz") <= max_size)
-        ).select("ord"),
-        "ord",
-    )
-
-
 def capped_baskets(
     li: DataFrame, min_size: int = 2, max_size: int = 16
 ) -> DataFrame:

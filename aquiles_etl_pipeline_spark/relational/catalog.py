@@ -60,6 +60,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         warm_python_workers,
     )
 
+    # input-derived shuffle sizing, re-derived whenever the session
+    # switches dataset dirs, so it runs before the memo below — see
+    # session.tune_batch_shuffle_partitions (r11)
+    tune_batch_shuffle_partitions(spark, sf_dir)
     key = (session_key(spark), sf_dir, name)
     cached = _LOAD_CACHE.get(key)
     if cached is not None:
@@ -69,9 +73,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # daemon in the background on first table load, off the critical
     # path of whichever query first needs an Arrow UDF
     warm_python_workers(spark)
-    # input-derived shuffle sizing, once per (session, dataset dir) —
-    # see session.tune_batch_shuffle_partitions (r11)
-    tune_batch_shuffle_partitions(spark, sf_dir)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # belt-and-braces for sessions not built by session.get_spark:

@@ -83,35 +83,22 @@ def _synth_input(p: DataFrame) -> DataFrame:
 )
 def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..merge import Warehouse, bootstrap
-    from ..merge.upserts import merge_staging_to_fact_tables
-    from ..pipeline import apply_transformations, map_columns_to_apply_transformations
-    from ..staging import load_data_to_staging_tables
-
     from ..session import batch_pipeline_confs
+    from ..sources import orchestrator
 
     # repartition: part arrives as one file/partition and the exact-
-    # parity Arrow UDF chain is CPU-bound; persist: the three staging
-    # projections + their counts all re-derive the wide record
+    # parity Arrow UDF chain is CPU-bound
     par = spark.sparkContext.defaultParallelism
-    wide = apply_transformations(
-        map_columns_to_apply_transformations(
-            _synth_input(load(spark, sf_dir, "part")).repartition(par)
-        )
-    ).persist()
+    raw = _synth_input(load(spark, sf_dir, "part")).repartition(par)
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="q41_wh_"))
     bootstrap(wh)
-    guid = "q41-batch"
-    # batch-sized merge chain: AQE off + narrow shuffles (see
-    # session.batch_pipeline_confs) — the staging batch is one file's
-    # worth of rows, so job-count, not data, is the cost driver
+    # the product's own ingest chain, batch-sized: AQE off + narrow
+    # shuffles (see session.batch_pipeline_confs) — the staging batch is
+    # one file's worth of rows, so job-count, not data, is the cost
+    # driver.  The chain releases its transform cache before returning,
+    # so the readback below depends only on warehouse parquet.
     with batch_pipeline_confs(spark):
-        load_data_to_staging_tables(wh, wide, guid, collect_counts=False)
-        merge_staging_to_fact_tables(wh, guid, collect_stats=False)
-
-    # the readback below depends only on warehouse parquet, not on the
-    # transform lineage — release the cache so repeated pipeline runs
-    # (and the rest of a bench sweep) don't accumulate heap
-    wide.unpersist()
+        orchestrator.run_pipeline(wh, raw)
 
     pp = wh.read("provider_product").alias("pp")
     prod = wh.read("product").alias("prod")

@@ -570,7 +570,6 @@ def q370(spark: SparkSession, sf_dir: str) -> DataFrame:
                 },
                 insert=True,
                 bucket_col="_bucket",
-                collect_stats=False,
             )
 
         def drain() -> None:

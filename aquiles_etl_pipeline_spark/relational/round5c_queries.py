@@ -541,7 +541,6 @@ def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_condition=F.col("_src__op") == "D",
         insert=True,
         bucket_col="_bucket",
-        collect_stats=False,
     )
     return (
         wh.read("dim_orders")

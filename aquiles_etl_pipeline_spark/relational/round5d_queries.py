@@ -646,7 +646,6 @@ def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_condition=F.col("_src__op") == "D",
         insert=True,
         bucket_col="_bucket",
-        collect_stats=False,
     )
     v2 = wh.history("dim_orders")[-1]["version"]
     feed = table_changes(wh, "dim_orders", v1, v2, on="o_orderkey")
@@ -1006,7 +1005,6 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_condition=F.col("fk_cust") == -1,
         insert=False,
         bucket_col="_bucket",
-        collect_stats=False,
     )
     return (
         wh.read("fact_orders")
@@ -1223,7 +1221,6 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         insert=True,
         bucket_col="_bucket",
-        collect_stats=False,
     )
     return wh.read("mv_orders").select(
         "o_orderpriority",

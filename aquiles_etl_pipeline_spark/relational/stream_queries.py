@@ -927,7 +927,6 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
                 delete_condition=F.col("_src__op") == "D",
                 insert=True,
                 bucket_col="_bucket",
-                collect_stats=False,
             )
 
         def drain() -> None:

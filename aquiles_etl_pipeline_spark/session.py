@@ -9,12 +9,14 @@ cluster-sane (AQE, broadcast threshold, shuffle partitions sized to cores).
 
 from __future__ import annotations
 
+import logging
 import os
 from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+_log = logging.getLogger(__name__)
 
 _WARMED_SESSIONS: set[str] = set()
 
@@ -166,7 +168,8 @@ def stream_batch_confs(
     return scoped_confs(spark, confs)
 
 
-_TUNED_SESSIONS: set[tuple[str, str]] = set()
+# session key -> the dataset dir whose shuffle count is in force
+_TUNED_DIR: dict[str, str] = {}
 
 
 def tune_batch_shuffle_partitions(
@@ -195,27 +198,34 @@ def tune_batch_shuffle_partitions(
     one task) while n>=cores/8 kept them at their cores-sized times.
     On a 100 TB dataset the byte term saturates the cap, i.e. a real
     cluster keeps full parallelism; only file-sized inputs shrink.
-    Applied once per (session, dataset dir): queries against the same
-    dir share the setting, and a session that switches datasets
-    re-derives it.  Partitioning never changes query RESULTS (every
-    operator here is key- or order-insensitive to partition count),
-    only scheduling.
+
+    Applied when a session switches datasets: queries against the dir
+    it last tuned for leave the conf alone (so a scope such as
+    :func:`stream_batch_confs` keeps its own count), and a session that
+    goes A→B→A gets A's count back.  A dir whose size is unknown — not
+    a local directory (a remote URI), 0 bytes, or unreadable — leaves
+    the conf untouched.  Partitioning never changes query RESULTS
+    (every operator here is key- or order-insensitive to partition
+    count), only scheduling.
     """
     import math
 
-    key = (session_key(spark), str(data_dir))
-    if key in _TUNED_SESSIONS:
+    key, data_dir = session_key(spark), str(data_dir)
+    if _TUNED_DIR.get(key) == data_dir:
         return
-    _TUNED_SESSIONS.add(key)
+    _TUNED_DIR[key] = data_dir
+    path = Path(data_dir)
     try:
-        par = spark.sparkContext.defaultParallelism
-        path = Path(str(data_dir))
-        nbytes = sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
-        n = max(1, par // 8, math.ceil(nbytes / target_bytes))
-        n = min(n, 4 * par)
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    except Exception:  # tuning must never break a query
-        pass
+        files = path.rglob("*") if path.is_dir() else ()
+        nbytes = sum(f.stat().st_size for f in files if f.is_file())
+    except OSError as exc:
+        _log.warning("shuffle partitions left as set: cannot size %s (%s)", data_dir, exc)
+        return
+    if nbytes == 0:
+        return
+    par = spark.sparkContext.defaultParallelism
+    n = min(max(1, par // 8, math.ceil(nbytes / target_bytes)), 4 * par)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
 
 def get_spark(

@@ -56,17 +56,23 @@ def _csv_text_to_df(spark: SparkSession, csv_text: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def _run_pipeline(
-    spark: SparkSession, wh: Warehouse, df: DataFrame, mode: str = "exact"
-) -> tuple[str, int, dict, dict]:
-    """Steps 6-10 of §3.1: canonicalize → transform → staging → merge."""
+def run_pipeline(
+    wh: Warehouse, df: DataFrame, mode: str = "exact"
+) -> tuple[str | None, int, dict, dict]:
+    """Steps 6-10 of §3.1: canonicalize → transform → staging → merge.
+
+    The one ingest chain: the CSV and invoice paths, the streaming
+    directory ingest and q41 all run it.  Returns (batch GUID, rows,
+    staging counts, merge stats).  A frame whose rows all drop in the
+    transform stages and merges nothing: it returns 0 rows and no GUID,
+    and the caller decides whether that is an error."""
     df = map_columns_to_apply_transformations(df)
     transformed = apply_transformations(df, mode=mode)
     transformed = transformed.cache()
     try:
         n_rows = transformed.count()
         if n_rows == 0:
-            raise ValueError("CSV file is empty")  # etl:316-317
+            return None, 0, {}, {}
         batch_guid = str(uuid.uuid4())  # etl:323 — one GUID per file
         staging_counts = load_data_to_staging_tables(wh, transformed, batch_guid)
         merge_stats = merge_staging_to_fact_tables(wh, batch_guid)
@@ -97,7 +103,9 @@ def process_csv_file(
             df = _csv_text_to_df(spark, csv_text)
         else:
             raise ValueError("either csv_text or path is required")
-        batch_guid, n_rows, staging_counts, merge_stats = _run_pipeline(spark, wh, df, mode)
+        batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(wh, df, mode)
+        if n_rows == 0:
+            raise ValueError("CSV file is empty")  # etl:316-317
         ledger.mark_success(wh, info)  # etl:329-331
         return ProcessingResult(
             True, f"processed {n_rows} rows", n_rows, batch_guid,
@@ -176,7 +184,9 @@ def process_invoice_image(
         m = re.search(r"```(?:csv)?\s*(.*?)```", raw.strip(), re.DOTALL | re.IGNORECASE)
         csv_text = m.group(1).strip() if m else raw.strip()
         df = _csv_text_to_df(spark, csv_text)
-        batch_guid, n_rows, staging_counts, merge_stats = _run_pipeline(spark, wh, df, mode)
+        batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(wh, df, mode)
+        if n_rows == 0:
+            raise ValueError("CSV file is empty")  # etl:316-317
         stem = image_name.rsplit(".", 1)[0]
         csv_filename = f"{stem}_{batch_guid[:8]}.csv"
         from pathlib import Path

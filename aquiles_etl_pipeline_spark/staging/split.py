@@ -9,12 +9,13 @@ ProductDescription/ProviderName/Price for later key resolution
 
 Scale: staging tables are partitioned by BatchGuid so downstream merges
 prune to the one partition they own; the distinct on providers is the
-only shuffle in the split.
+only shuffle in the split.  The three row counts ride on the three write
+jobs as ``Observation`` metrics, so counting costs no job of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..merge.schemas import DEC
@@ -22,14 +23,12 @@ from ..merge.warehouse import Warehouse
 
 
 def load_data_to_staging_tables(
-    wh: Warehouse, df: DataFrame, batch_guid: str, collect_counts: bool = True
+    wh: Warehouse, df: DataFrame, batch_guid: str
 ) -> dict[str, int]:
     """Returns inserted-row counts per staging table (reference logs the
-    same); ``collect_counts=False`` skips the three count jobs for
-    callers that don't report them."""
-    if df.isEmpty():  # etl:63-66
-        return {"providers": 0, "products": 0, "provider_products": 0}
-
+    same).  An empty ``df`` stages nothing and counts zeros (etl:63-66);
+    the ingest chain never gets that far with one (see
+    sources.orchestrator.run_pipeline)."""
     guid = F.lit(batch_guid)
 
     # etl:111-122 — distinct non-null CleanProviderName
@@ -75,21 +74,21 @@ def load_data_to_staging_tables(
 
     n_out = max(8, wh.spark.sparkContext.defaultParallelism // 4)
     writes = [
-        ("staging_provider", providers.coalesce(n_out)),
-        ("staging_product", products.coalesce(n_out)),
-        ("staging_provider_product", provider_products.coalesce(n_out)),
+        ("providers", "staging_provider", providers),
+        ("products", "staging_product", products),
+        ("provider_products", "staging_provider_product", provider_products),
     ]
+    counts = {key: Observation() for key, _, _ in writes}
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
-            pool.submit(wh.append, name, frame, partition_by=["BatchGuid"])
-            for name, frame in writes
+            pool.submit(
+                wh.append,
+                table,
+                frame.observe(counts[key], F.count(F.lit(1)).alias("n")).coalesce(n_out),
+                partition_by=["BatchGuid"],
+            )
+            for key, table, frame in writes
         ]
         for f in futures:
             f.result()
-    if not collect_counts:
-        return {"providers": -1, "products": -1, "provider_products": -1}
-    return {
-        "providers": providers.count(),
-        "products": products.count(),
-        "provider_products": provider_products.count(),
-    }
+    return {key: obs.get["n"] for key, obs in counts.items()}

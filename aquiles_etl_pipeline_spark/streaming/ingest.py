@@ -27,7 +27,6 @@ Two paths with different scale postures:
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,11 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import ledger
-from ..merge.upserts import merge_staging_to_fact_tables
 from ..merge.warehouse import Warehouse
-from ..pipeline import apply_transformations, map_columns_to_apply_transformations
-from ..sources.orchestrator import ProcessingResult, process_csv_file
-from ..staging import load_data_to_staging_tables
+from ..sources.orchestrator import ProcessingResult, process_csv_file, run_pipeline
 
 # Declared schema for the scale path: the §3.4 required header set
 # (/root/reference/core/etl_orchestrator.py:423-439), all-string
@@ -127,7 +123,8 @@ def stream_ingest_directory(
     max_files_per_trigger: int | None = None,
 ) -> StreamIngestStats:
     """Scale-path ingest: one micro-batch (N files) = one batch GUID =
-    one staging load + one merge; transforms never leave the executors."""
+    one run of the ingest chain (sources.orchestrator.run_pipeline);
+    transforms never leave the executors."""
     stats = StreamIngestStats()
 
     reader = (
@@ -153,15 +150,11 @@ def stream_ingest_directory(
         for info in infos:
             ledger.mark_in_progress(wh, info)
         try:
-            df = map_columns_to_apply_transformations(batch_df.drop("_file_path"))
-            transformed = apply_transformations(df, mode=mode).cache()
-            try:
-                n_rows = transformed.count()
-                batch_guid = str(uuid.uuid4())
-                staging_counts = load_data_to_staging_tables(wh, transformed, batch_guid)
-                merge_stats = merge_staging_to_fact_tables(wh, batch_guid)
-            finally:
-                transformed.unpersist()
+            # a micro-batch whose rows all drop in the transform is a
+            # 0-row success, not an empty-file failure
+            batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(
+                wh, batch_df.drop("_file_path"), mode
+            )
             for info in infos:
                 ledger.mark_success(wh, info)
             stats.results.append(

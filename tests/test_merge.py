@@ -5,6 +5,8 @@ ledger lifecycle, and batch idempotency."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -938,3 +940,149 @@ def test_generic_merge_into_aligns_source_key_dtypes(spark, tmp_path):
     assert after[7] == -7, "existing key was not matched (dtype bucket drift)"
     assert len(after) == 50, "existing key was duplicated instead of updated"
     assert stats["updated"] == 1 and stats["inserted"] == 0
+
+
+def _within(fn, seconds=600):
+    """fn(), failing instead of hanging when it has not returned in
+    time: an Observation whose node never ran blocks its get() forever."""
+    out = {}
+
+    def run():
+        try:
+            out["result"] = fn()
+        except BaseException as exc:  # re-raised below, in the test's thread
+            out["error"] = exc
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(seconds)
+    assert not worker.is_alive(), f"still running after {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["result"]
+
+
+REPRICE_CSV = """Producto,Fecha 1,Provedor,Precio
+Arroz Premium 500g x 12 (G13),20/03/2024,Canasta,2.700
+Aceite Capullo 500ml,22/04/2025,Canasta,1.400
+Leche Entera 1lt,22/04/2025,Lacteos Sur,3.100
+"""
+
+
+def test_ingest_stats_pin_every_count(spark, wh):
+    """Every staging count and merge stat, worked out by hand.  The
+    counts ride on the write jobs as Observation metrics, so a
+    misplaced one shows here: a count doubled through a cache, shorted
+    by a partial job, or a get() that never returns.
+
+    Bootstrap (CSV): 3 rows, providers {Provedor A Sas, Canasta}, units
+    {g, ml}, descriptions {Arroz, Aceite}, pairs {(Arroz, A), (Aceite,
+    Canasta), (Arroz, Canasta)}; everything is new.  Re-pricing: Arroz
+    and Aceite re-priced by Canasta (two matched pairs) plus one new
+    product, provider, unit and pair (Leche Entera 1lt, Lacteos Sur).
+    Rerun of that batch under a new file name: every source row
+    matches, nothing is inserted."""
+
+    def ingest(name, text):
+        return _within(lambda: process_csv_file(spark, wh, "c", name, csv_text=text))
+
+    boot = ingest("boot.csv", CSV)
+    assert boot.success, boot.message
+    assert boot.staging_counts == {"providers": 2, "products": 3, "provider_products": 3}
+    assert boot.merge_stats == {
+        "providers_inserted": 2,
+        "units_created": 2,
+        "products": {"inserted": 2, "total_source": 2},
+        "provider_products": {"inserted": 3, "total_source": 3},
+    }
+
+    reprice = ingest("reprice.csv", REPRICE_CSV)
+    assert reprice.success, reprice.message
+    assert reprice.staging_counts == {"providers": 2, "products": 3, "provider_products": 3}
+    assert reprice.merge_stats == {
+        "providers_inserted": 1,
+        "units_created": 1,
+        "products": {"inserted": 1, "total_source": 3},
+        "provider_products": {"inserted": 1, "total_source": 3},
+    }
+
+    rerun = ingest("reprice_again.csv", REPRICE_CSV)
+    assert rerun.success, rerun.message
+    assert rerun.staging_counts == reprice.staging_counts
+    assert rerun.merge_stats == {
+        "providers_inserted": 0,
+        "units_created": 0,
+        "products": {"inserted": 0, "total_source": 3},
+        "provider_products": {"inserted": 0, "total_source": 3},
+    }
+    assert wh.read("product").count() == 3
+    assert wh.read("provider_product").count() == 4
+
+
+def test_generic_merge_into_bucketed_stats(spark, tmp_path):
+    """merge_into's counts on a bucket-scoped merge with all three
+    clauses, from a source of another session (as a foreachBatch
+    micro-batch is), and on an empty source, whose touched-bucket read
+    the optimizer empties: every count is 0 and none blocks."""
+    from aquiles_etl_pipeline_spark.merge.generic import _bucket_expr, merge_into
+
+    wh = Warehouse(spark, tmp_path / "gmstats")
+    base = spark.range(0, 40).select(
+        F.col("id").cast("int").alias("id"), F.col("id").cast("int").alias("v")
+    )
+    wh.overwrite(
+        "t", base.withColumn("_bucket", _bucket_expr(["id"])), partition_by=["_bucket"]
+    )
+    source = spark.newSession().createDataFrame(
+        [(3, -3, "U"), (4, 0, "D"), (5, 0, "D"), (6, -6, "X"), (100, 1, "I"), (101, 2, "I")],
+        "id int, v int, _op string",
+    )
+    stats = _within(
+        lambda: merge_into(
+            wh,
+            "t",
+            source,
+            on="id",
+            update_set={"v": F.col("_src_v")},
+            update_condition=F.col("_src__op") == "U",
+            delete_condition=F.col("_src__op") == "D",
+            bucket_col="_bucket",
+        ),
+    )
+    # id 6 matches but neither clause fires: it stays, uncounted
+    assert stats == {"updated": 1, "deleted": 2, "inserted": 2}
+    after = {r["id"]: r["v"] for r in wh.read("t").collect()}
+    assert after[3] == -3 and after[6] == 6 and 4 not in after and 5 not in after
+    assert len(after) == 40
+
+    empty = spark.createDataFrame([], "id int, v int")
+    assert _within(lambda: merge_into(wh, "t", empty, on="id", bucket_col="_bucket")) == {
+        "updated": 0, "deleted": 0, "inserted": 0,
+    }
+    assert wh.read("t").count() == 40
+
+
+def test_staging_counts_survive_append_fallback_from_another_session(spark, wh):
+    """A staging table whose stored schema diverges is rewritten through
+    Warehouse.append's union fallback.  The staged frame may belong to
+    another session (a foreachBatch micro-batch does), and its counts
+    must still arrive: the rewrite has to run in that frame's session."""
+    from aquiles_etl_pipeline_spark.pipeline import (
+        apply_transformations,
+        map_columns_to_apply_transformations,
+    )
+    from aquiles_etl_pipeline_spark.staging import load_data_to_staging_tables
+
+    legacy = spark.createDataFrame(
+        [("Old", 1, "b0")], "Name string, Legacy int, BatchGuid string"
+    )
+    wh.overwrite("staging_provider", legacy, partition_by=["BatchGuid"])
+    header, *rows = [line.split(",") for line in CSV.strip().split("\n")]
+    raw = spark.newSession().createDataFrame(rows, header)
+    df = apply_transformations(map_columns_to_apply_transformations(raw))
+
+    counts = _within(lambda: load_data_to_staging_tables(wh, df, "b1"), seconds=300)
+    assert counts == {"providers": 2, "products": 3, "provider_products": 3}
+    staged = wh.read("staging_provider")
+    assert staged.where(F.col("BatchGuid") == "b1").count() == 2
+    assert staged.where(F.col("BatchGuid") == "b0").count() == 1

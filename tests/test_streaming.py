@@ -127,6 +127,36 @@ def test_stream_ingest_directory_single_merge(spark, tmp_path):
     assert wh.read("process_file").where(F.col("StatusId") == 3).count() == 2
 
 
+def test_stream_ingest_directory_all_rows_dropped_is_zero_row_success(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch whose rows all drop in the transform succeeds with
+    0 rows: the directory stream shares the CSV path's pipeline but not
+    its "CSV file is empty" failure.  With the standard header no row
+    ever drops (IsValidPrice is never NULL), so the transform here is
+    made to drop every row."""
+    from aquiles_etl_pipeline_spark.sources import orchestrator
+
+    transform = orchestrator.apply_transformations
+    monkeypatch.setattr(
+        orchestrator,
+        "apply_transformations",
+        lambda df, mode="exact": transform(df, mode=mode).where(F.lit(False)),
+    )
+    inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
+    inp.mkdir()
+    wh = Warehouse(spark, tmp_path / "wh")
+    bootstrap(wh)
+    (inp / "a.csv").write_text(CSV_A)
+
+    stats = stream_ingest_directory(spark, wh, str(inp), str(ckpt))
+    assert len(stats.results) == 1
+    res = stats.results[0]
+    assert res.success and res.rows_processed == 0, res.message
+    assert wh.read("product").isEmpty()
+    assert ledger_status(wh) == {("a.csv", 3)}
+
+
 def test_tumbling_streaming_matches_batch(spark, tmp_path):
     events = load(spark, SF, "events")
     src_dir = tmp_path / "events_src"
@@ -717,6 +747,82 @@ def test_stream_batch_confs_sizing(spark, tmp_path):
     (land2 / "b.json").write_bytes(b"y" * 1000)
     with stream_batch_confs(spark, land, land2, target_bytes=1000):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+
+
+@pytest.fixture()
+def tuner(spark, monkeypatch):
+    """The session module with a fresh dataset-switch memo; restores
+    the memo and the session's shuffle-partition count afterwards."""
+    from aquiles_etl_pipeline_spark import session
+
+    monkeypatch.setattr(session, "_TUNED_DIR", {}, raising=False)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    yield session
+    spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_shuffle_tuner_leaves_conf_when_size_unknown(spark, tmp_path, tuner):
+    """A dataset whose bytes the driver cannot see (a remote URI, a
+    missing or empty dir) keeps the session's count instead of being
+    pinned to the cores/8 floor."""
+    (tmp_path / "empty").mkdir()
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    for d in ("s3a://bucket/warehouse/sf1", str(tmp_path / "missing"), str(tmp_path / "empty")):
+        tuner.tune_batch_shuffle_partitions(spark, d)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7", d
+
+
+def test_shuffle_tuner_follows_dataset_switches(spark, tmp_path, tuner):
+    """A session that loads from dir A, then B, then A again runs A's
+    queries with A's count, not B's; loading from the dir already in
+    force leaves the conf alone, so a conf scope keeps its own count."""
+    import pandas as pd
+
+    from aquiles_etl_pipeline_spark.session import scoped_confs
+
+    par = spark.sparkContext.defaultParallelism
+    a, b = tmp_path / "a", tmp_path / "b"
+    for d in (a, b):
+        d.mkdir()
+        pd.DataFrame({"x": [1, 2]}).to_parquet(d / "t.parquet")
+    # a sparse file: 4x cores' worth of 64 MB targets, no disk used
+    with open(b / "filler.bin", "wb") as f:
+        f.truncate((64 << 20) * 4 * par)
+    small, big = str(max(1, par // 8)), str(4 * par)
+
+    def loaded_count(d):
+        load(spark, str(d), "t")
+        return spark.conf.get("spark.sql.shuffle.partitions")
+
+    assert loaded_count(a) == small
+    assert loaded_count(b) == big
+    assert loaded_count(a) == small
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "13"}):
+        assert loaded_count(a) == "13"
+
+
+def test_shuffle_tuner_logs_what_it_skips(spark, tmp_path, tuner, monkeypatch, caplog):
+    """A dir the driver cannot size is skipped with a warning that
+    names it, not swallowed silently."""
+    import logging
+    from pathlib import Path
+
+    d = tmp_path / "unreadable"
+    d.mkdir()
+    (d / "t.parquet").write_bytes(b"x" * 10)
+    real_stat = Path.stat
+
+    def stat(self, *args, **kwargs):
+        if self.name == "t.parquet":
+            raise PermissionError(13, "Permission denied", str(self))
+        return real_stat(self, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "stat", stat)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    with caplog.at_level(logging.WARNING, logger="aquiles_etl_pipeline_spark.session"):
+        tuner.tune_batch_shuffle_partitions(spark, str(d))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    assert any(str(d) in r.getMessage() for r in caplog.records)
 
 
 def test_land_sentinel_single_parseable_file(spark, tmp_path):
