@@ -30,9 +30,10 @@ column names — ``F.col("price")``, not ``F.col("_src_price")``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .observed import observe
 from .schemas import N_BUCKETS
 from .warehouse import Warehouse
 
@@ -81,7 +82,7 @@ def merge_into(
     REFUSES (the Delta ``MERGE`` multiple-match error) instead of
     picking one nondeterministically.  Returns counts
     {updated, deleted, inserted}, observed on the write job itself
-    (``Observation`` metrics, no extra action).
+    (``Observation`` metrics, no extra action; see merge.observed).
     """
     keys = [on] if isinstance(on, str) else list(on)
     target = wh.read(table)
@@ -223,9 +224,8 @@ def merge_into(
     # to another one (a foreachBatch micro-batch), so both sit on frames
     # of the target's session, the one the write runs in: the scoped
     # target rows here, every written row below.
-    scoped = Observation()
-    joined = joined.observe(
-        scoped,
+    joined, scoped = observe(
+        joined,
         F.count(F.lit(1)).alias("rows"),
         F.count_if(do_delete).alias("deleted"),
         F.count_if(do_update & ~do_delete).alias("updated"),
@@ -262,16 +262,15 @@ def merge_into(
         final = survivors.unionByName(ins_src.select(*proj))
     else:
         final = survivors
-    written = Observation()
-    final = final.observe(written, F.count(F.lit(1)).alias("rows"))
+    final, written = observe(final, F.count(F.lit(1)).alias("rows"))
 
     if bucket_col is not None:
         wh.replace_partitions(table, final, bucket_col, touched)
     else:
         wh.overwrite(table, final)
-    seen = scoped.get
+    seen = scoped()
     return {
         "updated": seen["updated"],
         "deleted": seen["deleted"],
-        "inserted": written.get["rows"] - (seen["rows"] - seen["deleted"]),
+        "inserted": written()["rows"] - (seen["rows"] - seen["deleted"]),
     }

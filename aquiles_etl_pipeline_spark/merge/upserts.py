@@ -25,8 +25,8 @@ transaction (etl:171), which Delta/parquet cannot express.
 
 Stats: M1 and U1 count their new rows before writing (the count gates
 the write).  M2 and M3 report ``inserted`` and ``total_source`` through
-an ``Observation`` on the frame their write job computes, so the counts
-cost no job of their own.
+an ``Observation`` on the frame their write job computes (merge.observed),
+so the counts cost no job of their own.
 
 Scale: staging batches are file-sized (small); every staging-vs-fact
 join broadcasts the staging side.  Fact rewrites become Delta MERGE
@@ -35,11 +35,14 @@ file-level rewrites on a real cluster (see warehouse.py seam).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from typing import Callable
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import scalar
+from .observed import observe
 from .schemas import N_BUCKETS
 from .warehouse import Warehouse
 
@@ -72,7 +75,7 @@ def _next_ids(existing: DataFrame, new_rows: DataFrame, order_col: str) -> DataF
     )
 
 
-def _observed(merged: DataFrame) -> tuple[DataFrame, Observation]:
+def _observed(merged: DataFrame) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
     """Attach M2/M3's row counts to the frame their write job computes.
 
     ``_op`` is 1 on a target row the source matched, 2 on an inserted
@@ -80,13 +83,12 @@ def _observed(merged: DataFrame) -> tuple[DataFrame, Observation]:
     write.  The Observation sits above any persisted frame, so only the
     merge's own write job evaluates it (a cache filled by a concurrent
     job can neither double nor short the count)."""
-    obs = Observation()
-    observed = merged.observe(
-        obs,
+    observed, counts = observe(
+        merged,
         F.count_if(F.col("_op") == 2).alias("inserted"),
         F.count("_op").alias("total_source"),
     )
-    return observed.drop("_op"), obs
+    return observed.drop("_op"), counts
 
 
 def _staging_batch(wh: Warehouse, table: str, batch_guid: str) -> DataFrame:
@@ -301,7 +303,7 @@ def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, in
     """Write M2's merged touched-bucket content (untouched partitions
     hardlink forward).  The plan's caches stay alive for a concurrent
     M3 still reading ``plan.final``; the caller releases them."""
-    final, obs = _observed(plan.final)
+    final, counts = _observed(plan.final)
     if not plan.touched:
         # bootstrap batch (empty target): the insert side rides the
         # single-partition id window, so the partitioned write would
@@ -312,7 +314,7 @@ def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, in
         # blanket repartition costs more than it saves there).
         final = final.repartition(8, "_bucket")
     wh.replace_partitions("product", final, "_bucket", plan.touched)
-    return obs.get
+    return counts()
 
 
 def merge_provider_products(
@@ -405,14 +407,14 @@ def merge_provider_products(
         _bucket_of("ProductId", "ProviderId").alias("_bucket"),
         F.lit(2).alias("_op"),
     )
-    merged, obs = _observed(updated.unionByName(new_rows))
+    merged, counts = _observed(updated.unionByName(new_rows))
     if not touched:
         # bootstrap fast path: parallelize the single-task partitioned
         # write (see commit_product_merge)
         merged = merged.repartition(8, "_bucket")
     wh.replace_partitions("provider_product", merged, "_bucket", touched)
     src.unpersist()
-    return obs.get
+    return counts()
 
 
 def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:

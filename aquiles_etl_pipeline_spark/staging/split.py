@@ -10,14 +10,16 @@ ProductDescription/ProviderName/Price for later key resolution
 Scale: staging tables are partitioned by BatchGuid so downstream merges
 prune to the one partition they own; the distinct on providers is the
 only shuffle in the split.  The three row counts ride on the three write
-jobs as ``Observation`` metrics, so counting costs no job of its own.
+jobs as ``Observation`` metrics (merge.observed), so counting costs no
+job of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..merge.observed import observe
 from ..merge.schemas import DEC
 from ..merge.warehouse import Warehouse
 
@@ -78,17 +80,19 @@ def load_data_to_staging_tables(
         ("products", "staging_product", products),
         ("provider_products", "staging_provider_product", provider_products),
     ]
-    counts = {key: Observation() for key, _, _ in writes}
+    observed = {
+        key: observe(frame, F.count(F.lit(1)).alias("n")) for key, _, frame in writes
+    }
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
             pool.submit(
                 wh.append,
                 table,
-                frame.observe(counts[key], F.count(F.lit(1)).alias("n")).coalesce(n_out),
+                observed[key][0].coalesce(n_out),
                 partition_by=["BatchGuid"],
             )
-            for key, table, frame in writes
+            for key, table, _ in writes
         ]
         for f in futures:
             f.result()
-    return {key: obs.get["n"] for key, obs in counts.items()}
+    return {key: counts()["n"] for key, (_, counts) in observed.items()}

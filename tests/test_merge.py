@@ -1086,3 +1086,28 @@ def test_staging_counts_survive_append_fallback_from_another_session(spark, wh):
     staged = wh.read("staging_provider")
     assert staged.where(F.col("BatchGuid") == "b1").count() == 2
     assert staged.where(F.col("BatchGuid") == "b0").count() == 1
+
+
+def test_observed_counts_recompute_when_the_metrics_never_arrive(spark, monkeypatch):
+    """An Observation hears only of executions in its own session, so a
+    frame of another session run inside this one's job never reports.
+    The counts then come from recomputing the aggregate after a bounded
+    wait instead of blocking forever; when the job does report they come
+    from the job itself."""
+    from aquiles_etl_pipeline_spark.merge import observed
+
+    monkeypatch.setattr(observed, "WAIT_S", 0.5)
+    recomputed = []
+    monkeypatch.setattr(observed._log, "warning", lambda *a: recomputed.append(a))
+
+    frame, counts = observed.observe(
+        spark.newSession().range(10), F.count(F.lit(1)).alias("n")
+    )
+    assert spark.range(0).unionByName(frame).count() == 10
+    assert _within(counts, seconds=120) == {"n": 10}
+    assert len(recomputed) == 1
+
+    frame, counts = observed.observe(spark.range(7), F.count(F.lit(1)).alias("n"))
+    assert frame.count() == 7
+    assert _within(counts, seconds=120) == {"n": 7}
+    assert len(recomputed) == 1
