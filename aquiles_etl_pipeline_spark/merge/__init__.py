@@ -1,4 +1,4 @@
-from .schemas import ALL_TABLES, bootstrap
+from .schemas import ALL_TABLES, bootstrap, bucket_of
 from .upserts import (
     ensure_units_of_measure,
     merge_provider_products,
@@ -11,6 +11,7 @@ __all__ = [
     "ALL_TABLES",
     "Warehouse",
     "bootstrap",
+    "bucket_of",
     "ensure_units_of_measure",
     "merge_provider_products",
     "merge_providers",

@@ -34,16 +34,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .observed import observe
-from .schemas import N_BUCKETS
+from .schemas import bucket_of
 from .warehouse import Warehouse
 
 SRC = "_src_"
-
-
-def _bucket_expr(key_cols: list[str]) -> Column:
-    """Stable bucket id from the merge key (the upserts._bucket_of
-    family): pmod(xxhash64(keys), N_BUCKETS)."""
-    return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")
 
 
 def merge_into(
@@ -73,7 +67,7 @@ def merge_into(
       raw source frame — use BARE source column names here, not the
       ``_src_`` prefix the matched-clause expressions use.
     * ``bucket_col``: when given, the target is partitioned by this
-      hash-of-key column ( :func:`_bucket_expr` — the same family the
+      hash-of-key column (:func:`.schemas.bucket_of`, the rule the
       built-in merges use) and the rewrite is partition-scoped;
       without it the merge rewrites the whole snapshot.
 
@@ -146,7 +140,7 @@ def merge_into(
         per_bucket = (
             source.groupBy(*keys)
             .count()
-            .groupBy(_bucket_expr(keys).alias("_b"))
+            .groupBy(bucket_of(*keys).alias("_b"))
             .agg(F.max("count").alias("_mx"))
             .collect()
         )
@@ -175,7 +169,7 @@ def merge_into(
         # predicate pushes to the parquet reader (row groups with zero
         # nulls skip on footer stats) — without it, NULL-bucketed rows
         # beyond the 256-row sample were invisible to the guard.
-        bad = ~F.col(bucket_col).cast("int").eqNullSafe(_bucket_expr(keys))
+        bad = ~F.col(bucket_col).cast("int").eqNullSafe(bucket_of(*keys))
         mismatch = (
             base.select(bucket_col, *keys)
             .unionByName(target.select(bucket_col, *keys).limit(256))
@@ -256,7 +250,7 @@ def merge_into(
             elif c in src_cols:
                 proj.append(F.col(c).cast(field.dataType).alias(c))
             elif bucket_col is not None and c == bucket_col:
-                proj.append(_bucket_expr(keys).alias(c))
+                proj.append(bucket_of(*keys).alias(c))
             else:
                 proj.append(F.lit(None).cast(field.dataType).alias(c))
         final = survivors.unionByName(ins_src.select(*proj))

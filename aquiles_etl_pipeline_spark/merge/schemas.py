@@ -9,6 +9,8 @@ column names preserved for parity.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DecimalType,
@@ -41,6 +43,13 @@ PROVIDER = _s(
 # partitions move by hardlink.  At cluster scale this is the Delta/
 # Iceberg partition/Z-order column; N_BUCKETS grows with table size.
 N_BUCKETS = 16
+
+
+def bucket_of(*key_cols: str) -> Column:
+    """Stable bucket id from the merge key — the fact-table ``_bucket``
+    column: pmod(xxhash64(keys), N_BUCKETS)."""
+    return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")
+
 
 # core/entities.py:101-119 (DescriptionHash hex string of sha256;
 # BINARY(32) parity via unhex when needed)

@@ -43,14 +43,8 @@ from pyspark.sql.window import Window
 
 from ..functions import scalar
 from .observed import observe
-from .schemas import N_BUCKETS
+from .schemas import bucket_of
 from .warehouse import Warehouse
-
-
-def _bucket_of(*key_cols: str) -> F.Column:
-    """Stable bucket id from the merge key — the fact-table partition
-    column (see schemas.N_BUCKETS)."""
-    return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")
 
 
 def _next_ids(existing: DataFrame, new_rows: DataFrame, order_col: str) -> DataFrame:
@@ -203,7 +197,7 @@ def prepare_product_source(wh: Warehouse, batch_guid: str) -> tuple[DataFrame, l
     # shuffle (this job also materializes src0's persist)
     touched = sorted(
         src0.agg(
-            F.collect_set(_bucket_of("DescriptionHash")).alias("_bs")
+            F.collect_set(bucket_of("DescriptionHash")).alias("_bs")
         ).first()["_bs"]
     )
     return src0, touched
@@ -292,7 +286,7 @@ def plan_product_merge(
         now.alias("CreatedDt"),
         now.alias("UpdatedDt"),
         "DescriptionHash",
-        _bucket_of("DescriptionHash").alias("_bucket"),
+        bucket_of("DescriptionHash").alias("_bucket"),
         F.lit(2).alias("_op"),
     )
     final = updated.unionByName(new_rows).persist()
@@ -373,7 +367,7 @@ def merge_provider_products(
     else:
         touched = sorted(
             src.agg(
-                F.collect_set(_bucket_of("ProductId", "ProviderId")).alias("_bs")
+                F.collect_set(bucket_of("ProductId", "ProviderId")).alias("_bs")
             ).first()["_bs"]
         )
     pp = wh.read("provider_product")
@@ -404,7 +398,7 @@ def merge_provider_products(
     new_rows = _next_ids(pp, inserts_src, "ProductId").select(
         "Id", "ProductId", "ProviderId", "IsValidated", "LastReviewDt",
         "PackageUnits", "IVA", "Price",
-        _bucket_of("ProductId", "ProviderId").alias("_bucket"),
+        bucket_of("ProductId", "ProviderId").alias("_bucket"),
         F.lit(2).alias("_op"),
     )
     merged, counts = _observed(updated.unionByName(new_rows))

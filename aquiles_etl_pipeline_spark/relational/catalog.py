@@ -42,11 +42,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table.
 
     ``events`` needs special handling when its parquet carries INT64
-    TIMESTAMP(NANOS), which Spark's reader rejects outright — we read the
-    raw nanos (legacy conf, runtime-settable) and floor-convert to
-    microsecond timestamps, matching DuckDB's floor-truncation.  Datasets
-    written with plain micro timestamps read straight through, so the
-    conversion is schema-sensitive, not hardcoded.
+    TIMESTAMP(NANOS), which Spark's reader rejects outright — sessions
+    read the raw nanos (session._PARQUET_READ_CONFS) and we floor-convert
+    to microsecond timestamps, matching DuckDB's floor-truncation.
+    Datasets written with plain micro timestamps read straight through,
+    so the conversion is schema-sensitive, not hardcoded.
+
+    Apart from the shuffle tuner and a foreign session's one-time
+    warm-up, loading sets no session conf, so a read never depends on
+    which tables were loaded before it.
 
     Frames are memoized per (session, dir, table): a DataFrame is an
     immutable plan, so reuse across the catalog sweep is free and
@@ -73,13 +77,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # daemon in the background on first table load, off the critical
     # path of whichever query first needs an Arrow UDF
     warm_python_workers(spark)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # belt-and-braces for sessions not built by session.get_spark:
-        # naive micro timestamps must come back TIMESTAMP (not NTZ) so
-        # watermarks/unix_micros work and values match DuckDB under UTC
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         from pyspark.sql.types import LongType
 
         if isinstance(df.schema["ts"].dataType, LongType):
@@ -87,9 +86,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # nanos is only precise to ~256 ns (53-bit mantissa) and rounds
             # some micros up by 1 vs DuckDB's exact truncation
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        _LOAD_CACHE[key] = df
-        return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _LOAD_CACHE[key] = df
     return df
 

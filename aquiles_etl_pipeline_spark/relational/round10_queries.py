@@ -538,8 +538,8 @@ def q370(spark: SparkSession, sf_dir: str) -> DataFrame:
         import tempfile
         from pathlib import Path
 
-        from ..merge import Warehouse
-        from ..merge.generic import _bucket_expr, merge_into
+        from ..merge import Warehouse, bucket_of
+        from ..merge.generic import merge_into
         from .stream_queries import _land_wave, _reland_wave
 
         root = Path(tempfile.mkdtemp(prefix="q370_storm_"))
@@ -555,7 +555,7 @@ def q370(spark: SparkSession, sf_dir: str) -> DataFrame:
         def apply_batch(bdf: DataFrame, batch_id: int) -> None:
             if bdf.isEmpty():
                 return
-            src = bdf.withColumn("_bucket", _bucket_expr(["event_id"]))
+            src = bdf.withColumn("_bucket", bucket_of("event_id"))
             if not wh.exists("facts"):
                 wh.overwrite("facts", src.limit(0), partition_by=["_bucket"])
             merge_into(

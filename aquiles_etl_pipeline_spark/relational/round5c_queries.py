@@ -499,12 +499,12 @@ def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.col("o_totalprice").cast(DEC2).alias("price"),
     )
-    from ..merge.generic import _bucket_expr
+    from ..merge import bucket_of
 
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="q171_merge_"))
     wh.overwrite(
         "dim_orders",
-        t.withColumn("_bucket", _bucket_expr(["o_orderkey"])),
+        t.withColumn("_bucket", bucket_of("o_orderkey")),
         partition_by=["_bucket"],
     )
     deletes = t.where(F.col("o_orderkey") % 10 == 7).select(

@@ -294,8 +294,8 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..merge import Warehouse
-    from ..merge.generic import _bucket_expr, merge_into
+    from ..merge import Warehouse, bucket_of
+    from ..merge.generic import merge_into
 
     spark_ = spark
     wh = Warehouse(spark_, tempfile.mkdtemp(prefix="q177_gdpr_"))
@@ -313,17 +313,17 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wh.overwrite(
         "pii_customer",
-        cust.withColumn("_bucket", _bucket_expr(["c_custkey"])),
+        cust.withColumn("_bucket", bucket_of("c_custkey")),
         partition_by=["_bucket"],
     )
     wh.overwrite(
         "pii_orders",
-        orders.withColumn("_bucket", _bucket_expr(["o_custkey"])),
+        orders.withColumn("_bucket", bucket_of("o_custkey")),
         partition_by=["_bucket"],
     )
     wh.overwrite(
         "fact_lineitem",
-        li.withColumn("_bucket", _bucket_expr(["l_orderkey"])),
+        li.withColumn("_bucket", bucket_of("l_orderkey")),
         partition_by=["_bucket"],
     )
     def _counts(tables: tuple[str, ...]) -> dict[str, int]:
@@ -592,9 +592,9 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..merge import Warehouse
+    from ..merge import Warehouse, bucket_of
     from ..merge.cdf import table_changes
-    from ..merge.generic import _bucket_expr, merge_into
+    from ..merge.generic import merge_into
 
     DEC2 = "decimal(18,2)"
     t = (
@@ -609,7 +609,7 @@ def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="q181_cdf_"))
     wh.overwrite(
         "dim_orders",
-        t.withColumn("_bucket", _bucket_expr(["o_orderkey"])),
+        t.withColumn("_bucket", bucket_of("o_orderkey")),
         partition_by=["_bucket"],
     )
     v1 = wh.history("dim_orders")[-1]["version"]
@@ -954,8 +954,8 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..merge import Warehouse
-    from ..merge.generic import _bucket_expr, merge_into
+    from ..merge import Warehouse, bucket_of
+    from ..merge.generic import merge_into
 
     DEC2 = "decimal(18,2)"
     facts = (
@@ -985,7 +985,7 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wh.overwrite(
         "fact_orders",
-        wave1.withColumn("_bucket", _bucket_expr(["o_orderkey"])),
+        wave1.withColumn("_bucket", bucket_of("o_orderkey")),
         partition_by=["_bucket"],
     )
     # late dim batch arrives: backfill EXACTLY the pending rows
@@ -1185,8 +1185,8 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..merge import Warehouse
-    from ..merge.generic import _bucket_expr, merge_into
+    from ..merge import Warehouse, bucket_of
+    from ..merge.generic import merge_into
 
     DEC2 = "decimal(18,2)"
     o = load(spark, sf_dir, "orders").select(
@@ -1203,7 +1203,7 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh.overwrite(
         "mv_orders",
         rollup(o.where(F.col("o_orderkey") % 3 != 0)).withColumn(
-            "_bucket", _bucket_expr(["o_orderpriority"])
+            "_bucket", bucket_of("o_orderpriority")
         ),
         partition_by=["_bucket"],
     )

@@ -854,8 +854,8 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from pyspark.sql import functions as F
 
-        from ..merge import Warehouse
-        from ..merge.generic import _bucket_expr, merge_into
+        from ..merge import Warehouse, bucket_of
+        from ..merge.generic import merge_into
         from .catalog import DEC, emit
 
         root = Path(tempfile.mkdtemp(prefix="q172_cdc_"))
@@ -869,7 +869,7 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
         wh = Warehouse(spark, str(root / "wh"))
         wh.overwrite(
             "dim",
-            t.withColumn("_bucket", _bucket_expr(["o_orderkey"])),
+            t.withColumn("_bucket", bucket_of("o_orderkey")),
             partition_by=["_bucket"],
         )
         cents = (F.col("price") * 100).cast("long")

@@ -5,11 +5,14 @@ Replaces the reference's connection bootstrap
 probe): Spark owns connections/retries, so the only bootstrap we need is a
 well-configured session. Tuned for local[N] testing but every setting is
 cluster-sane (AQE, broadcast threshold, shuffle partitions sized to cores).
+This module is the only code that decides ``spark.sql.shuffle.partitions``
+(see get_spark for the precedence order).
 """
 
 from __future__ import annotations
 
 import logging
+import math
 import os
 from contextlib import contextmanager
 from pathlib import Path
@@ -73,10 +76,43 @@ def batch_pipeline_confs(spark: SparkSession):
     )
 
 
+# input bytes per shuffle partition wherever the count is input-sized
+PARTITION_BYTES = 64 << 20
+
+
+def _pinned_at_launch(spark: SparkSession) -> bool:
+    """Whether the caller fixed ``spark.sql.shuffle.partitions`` at
+    launch (builder, spark-submit); runtime ``conf.set`` calls never
+    show up in the launch conf."""
+    return spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions")
+
+
+def _input_sized_partitions(spark: SparkSession, paths, floor: int) -> int | None:
+    """ceil(bytes under ``paths`` / PARTITION_BYTES) clamped to [floor,
+    4x defaultParallelism] (past 4x cores, raise per-partition
+    throughput, not partition count).  ``None`` when the size is
+    unknown: no bytes (a remote URI, a missing or empty path) or an
+    unreadable file (logged)."""
+    nbytes = 0
+    for p in paths:
+        path = Path(str(p))
+        try:
+            if path.is_dir():
+                nbytes += sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
+            elif path.is_file():
+                nbytes += path.stat().st_size
+        except OSError as exc:
+            _log.warning("shuffle partitions not input-sized: cannot size %s (%s)", p, exc)
+            return None
+    if nbytes == 0:
+        return None
+    par = spark.sparkContext.defaultParallelism
+    return min(max(floor, math.ceil(nbytes / PARTITION_BYTES)), 4 * par)
+
+
 def stream_batch_confs(
     spark: SparkSession,
     *input_paths,
-    target_bytes: int = 64 << 20,
     python_state: bool = False,
     no_data_batches: bool = True,
 ):
@@ -95,19 +131,17 @@ def stream_batch_confs(
     never changes their output).
 
     The partition count derives from the bytes sitting in the source
-    directory — ceil(bytes / target_bytes), floored at 1 — so the same
-    code on a 100 TB backlog sizes UP automatically (capped at 4x
-    defaultParallelism; past that, raise target throughput per
-    partition, not partition count).  This is the guide's
-    "derive partitioning from input size rather than a constant tuned
-    for either local mode or the cluster" rule applied to streams; the
-    64 MB default target matches the state-store sizing guidance of
-    one task-sized chunk per partition.  AQE is additionally disabled
+    directories (:func:`_input_sized_partitions`, floor 1; the floor
+    too when their size is unknown), so the same code on a 100 TB
+    backlog sizes UP automatically — the guide's "derive partitioning
+    from input size" rule applied to streams.  AQE is additionally disabled
     inside the scope for the foreachBatch BATCH jobs (rollup merges,
     sink writes): on file-sized batches its per-stage re-planning is
     pure scheduler overhead (the q41 batch_pipeline_confs finding —
-    34 -> 22 jobs); cluster-scale drains with big batches should pass
-    a bigger target_bytes and keep their own session AQE.
+    34 -> 22 jobs).
+
+    Precedence: inside the scope this count wins over the session's
+    (launch-fixed, tuned or cores default), which comes back on exit.
 
     NOTE on restarts: the FIRST drain against a fresh checkpoint bakes
     the state partition count into the checkpoint; later drains reuse
@@ -144,21 +178,10 @@ def stream_batch_confs(
     partition count at ``defaultParallelism`` (the actual cores of
     whatever cluster is running — not a local constant), keeping every
     Python worker busy; the input-derived count still takes over as
-    soon as the backlog outgrows cores * target_bytes.
+    soon as the backlog outgrows cores * PARTITION_BYTES.
     """
-    import math
-
-    nbytes = 0
-    for p in input_paths:
-        path = Path(str(p))
-        if path.is_dir():
-            nbytes += sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
-        elif path.is_file():
-            nbytes += path.stat().st_size
-    n = max(1, math.ceil(nbytes / target_bytes))
-    if python_state:
-        n = max(n, spark.sparkContext.defaultParallelism)
-    n = min(n, 4 * spark.sparkContext.defaultParallelism)
+    floor = spark.sparkContext.defaultParallelism if python_state else 1
+    n = _input_sized_partitions(spark, input_paths, floor) or floor
     confs = {
         "spark.sql.adaptive.enabled": "false",
         "spark.sql.shuffle.partitions": str(n),
@@ -172,9 +195,7 @@ def stream_batch_confs(
 _TUNED_DIR: dict[str, str] = {}
 
 
-def tune_batch_shuffle_partitions(
-    spark: SparkSession, data_dir: str, target_bytes: int = 64 << 20
-) -> None:
+def tune_batch_shuffle_partitions(spark: SparkSession, data_dir: str) -> None:
     """Size the session's ``spark.sql.shuffle.partitions`` to the BYTES
     of the dataset directory actually being queried — the batch-catalog
     twin of :func:`stream_batch_confs` (r11, guide §2 "derive
@@ -188,50 +209,53 @@ def tune_batch_shuffle_partitions(
     of a few MB.  Measured (r11, 12-query tail sample, min of 3 warm
     reps): cores-sized 6.29 s vs input-sized 5.20 s (−17%).
 
-    The count is ceil(bytes / 64 MB) clamped to [max(1, cores/8), 4x
-    defaultParallelism].  Both ends are cluster-derived, not local
-    constants: the cap repeats the streaming scope's rationale (past
-    4x cores, raise per-partition throughput, not partition count);
-    the FLOOR exists because a reduce stage can be compute-bound at
-    tiny shuffle bytes — pair-enumeration joins (q88/q201/q328/q352/
-    q356) measured ~2x slower at n=1 (the whole pair explosion runs on
-    one task) while n>=cores/8 kept them at their cores-sized times.
-    On a 100 TB dataset the byte term saturates the cap, i.e. a real
-    cluster keeps full parallelism; only file-sized inputs shrink.
+    The count is :func:`_input_sized_partitions` with a floor of
+    max(1, cores/8).  The FLOOR exists because a reduce stage can be
+    compute-bound at tiny shuffle bytes — pair-enumeration joins
+    (q88/q201/q328/q352/q356) measured ~2x slower at n=1 (the whole
+    pair explosion runs on one task) while n>=cores/8 kept them at
+    their cores-sized times.  On a 100 TB dataset the byte term
+    saturates the cap, i.e. a real cluster keeps full parallelism; only
+    file-sized inputs shrink.
+
+    Precedence, highest first: a count fixed at launch (then this
+    never touches the conf, so plan shapes follow the caller's count,
+    not the machine's cores); else this input-derived count; else, for
+    a dir of unknown size, the count in force (the cores default).
 
     Applied when a session switches datasets: queries against the dir
     it last tuned for leave the conf alone (so a scope such as
     :func:`stream_batch_confs` keeps its own count), and a session that
-    goes A→B→A gets A's count back.  A dir whose size is unknown — not
-    a local directory (a remote URI), 0 bytes, or unreadable — leaves
-    the conf untouched.  Partitioning never changes query RESULTS
-    (every operator here is key- or order-insensitive to partition
-    count), only scheduling.
+    goes A→B→A gets A's count back.  Partitioning never changes query
+    RESULTS (every operator here is key- or order-insensitive to
+    partition count), only scheduling.
     """
-    import math
-
     key, data_dir = session_key(spark), str(data_dir)
     if _TUNED_DIR.get(key) == data_dir:
         return
     _TUNED_DIR[key] = data_dir
-    path = Path(data_dir)
-    try:
-        files = path.rglob("*") if path.is_dir() else ()
-        nbytes = sum(f.stat().st_size for f in files if f.is_file())
-    except OSError as exc:
-        _log.warning("shuffle partitions left as set: cannot size %s (%s)", data_dir, exc)
-        return
-    if nbytes == 0:
+    if _pinned_at_launch(spark):
         return
     par = spark.sparkContext.defaultParallelism
-    n = min(max(1, par // 8, math.ceil(nbytes / target_bytes)), 4 * par)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    n = _input_sized_partitions(spark, [data_dir], floor=max(1, par // 8))
+    if n is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+
+
+# Parquet read confs of every session.  INT64 TIMESTAMP(NANOS) reads as
+# raw longs, not an error (catalog.load converts `events`).  Naive
+# timestamps read as TIMESTAMP, not TIMESTAMP_NTZ: event-time watermarks
+# and unix_micros() reject NTZ, and under UTC both carry the same
+# wall-clock values (matching DuckDB's naive rendering).
+_PARQUET_READ_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def get_spark(
     app_name: str = "aquiles-etl-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -240,10 +264,14 @@ def get_spark(
     shuffle partitions sized to the parallelism actually available
     locally — on a real cluster leave ``spark.sql.shuffle.partitions``
     to AQE's coalescing instead of the 200 default.
+
+    Shuffle-partition precedence, highest first: a count in
+    ``extra_conf`` (fixed: the tuner leaves it alone); else
+    :func:`tune_batch_shuffle_partitions`' input-derived count; else
+    the cores default, set here only when the launch fixed none.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
 
     # Preloading worker daemon: forked Python workers inherit pandas/
     # pyarrow already imported (copy-on-write), so the first Arrow UDF
@@ -261,17 +289,10 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Naive parquet timestamps (isAdjustedToUTC=false) must read as
-        # TIMESTAMP, not TIMESTAMP_NTZ: event-time watermarks and
-        # unix_micros() reject NTZ, and with a UTC session the two carry
-        # identical wall-clock values anyway (matching DuckDB's naive
-        # rendering).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # iterative algorithms (connected components) reliable-checkpoint
         # path: let the ContextCleaner delete checkpoint files once their
@@ -284,9 +305,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_PARQUET_READ_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if not _pinned_at_launch(spark):
+        spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     warm_python_workers(spark)
     return spark
 
@@ -327,8 +350,8 @@ def ship_package_to_workers(spark: SparkSession) -> None:
                         zf.write(full, rel)
             _PKG_ZIP = zpath
         spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:  # never let shipping break a real session
-        pass
+    except Exception as exc:  # never let shipping break a real session
+        _log.warning("package not shipped to Python workers: %s: %s", type(exc).__name__, exc)
 
 
 _PKG_ZIP: str | None = None
@@ -344,11 +367,14 @@ def warm_python_workers(spark: SparkSession) -> None:
     daemon thread at session creation moves that boot off the critical
     path — it overlaps parquet reads and planning the driver does
     anyway.  Idempotent per session; safe to call with a foreign
-    session (the correctness driver's, a notebook's)."""
+    session (the correctness driver's, a notebook's), which also gets
+    the parquet read confs :func:`get_spark` launches with, once."""
     key = session_key(spark)
     if key in _WARMED_SESSIONS:
         return
     _WARMED_SESSIONS.add(key)
+    for k, v in _PARQUET_READ_CONFS.items():
+        spark.conf.set(k, v)
     ship_package_to_workers(spark)
 
     def _boot() -> None:
@@ -361,8 +387,8 @@ def warm_python_workers(spark: SparkSession) -> None:
                 return s
 
             spark.range(1).select(_noop("id")).collect()
-        except Exception:  # never let warm-up break a real session
-            pass
+        except Exception as exc:  # never let warm-up break a real session
+            _log.warning("Python worker warm-up failed: %s: %s", type(exc).__name__, exc)
 
     import threading
 

@@ -114,7 +114,7 @@ def main() -> None:
     # (144/327 survived in r07), so the durable round-over-round diff
     # source is this file in the repo working tree — the chunked stdout
     # below stays as a fallback for drivers that only read stdout.
-    # host/cpus provenance: the committed builder run and the driver's
+    # host/parallelism provenance: the committed builder run and the driver's
     # refresh come from DIFFERENT machines (r08: 342.8 s builder vs
     # 277.6 s driver for identical queries, zero per-query regressions)
     # — tagging the record keeps future diffs comparing like machines.
@@ -125,7 +125,10 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(timings),
         "host": platform.node() or "unknown",
-        "cpus": os.cpu_count(),
+        # the slots the run had, not the host's cores (r11 said 32 at local[8])
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+        "git_commit": _git_head(),
         # provenance (r10 ADVICE): since r10 the one-time streaming/
         # state-machinery boot runs in the UNTIMED warm-up block
         # (_warm_streaming_state), so per-query rows from r10 onward are
@@ -142,16 +145,53 @@ def main() -> None:
         print(line, flush=True)
 
 
-def _run_once(spark, sf_dir: str, name: str, spec) -> float:
-    t0 = time.perf_counter()
-    df = spec.fn(spark, sf_dir)
-    # force full computation; result sizes are small (aggregates/top-k)
-    # except row-level queries, where count() still executes the plan.
+def force(name: str, df) -> None:
+    """Run ``df`` through a full execution with a cheap action: result
+    sizes are small (aggregates/top-k) except row-level queries, where
+    count() still executes the plan."""
     if len(df.columns) <= 2 or name.split("_")[0] in {"q14", "q15", "q16", "q18", "q24"}:
         df.count()
     else:
         df.collect()
+
+
+def _run_once(spark, sf_dir: str, name: str, spec) -> float:
+    t0 = time.perf_counter()
+    force(name, spec.fn(spark, sf_dir))
     return time.perf_counter() - t0
+
+
+def resolve(specs, requested: list[str]) -> list[str]:
+    """Full catalog names for ``requested`` (qNNN short keys or full
+    names, comma-separated lists allowed); unknown names are reported
+    on stderr and dropped."""
+    by_short = {n.split("_", 1)[0]: n for n in specs}
+    names = []
+    for req in requested:
+        for r in req.split(","):
+            r = r.strip()
+            if not r:
+                continue
+            full = by_short.get(r, r)
+            if full not in specs:
+                print(f"[bench] unknown query: {r}", file=sys.stderr)
+                continue
+            names.append(full)
+    return names
+
+
+def _git_head() -> str:
+    """The commit the timed code came from ("" outside a git checkout)."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=Path(__file__).resolve().parent,
+            capture_output=True, text=True,
+        )
+    except OSError:  # no git binary
+        return ""
+    return out.stdout.strip()
 
 
 def _warm_streaming_state(spark) -> None:
@@ -241,18 +281,7 @@ def recheck(spark, sf_dir: str, requested: list[str]) -> None:
     from aquiles_etl_pipeline_spark.relational import registry
 
     specs = registry()
-    by_short = {n.split("_", 1)[0]: n for n in specs}
-    names = []
-    for req in requested:
-        for r in req.split(","):
-            r = r.strip()
-            if not r:
-                continue
-            full = by_short.get(r, r)
-            if full not in specs:
-                print(f"[bench] unknown query: {r}", file=sys.stderr)
-                continue
-            names.append(full)
+    names = resolve(specs, requested)
     if not names:
         print("[bench] --recheck: no valid queries given", file=sys.stderr)
         return

@@ -60,9 +60,9 @@ def test_csv_end_to_end(spark, wh):
     assert wh.read("staging_provider").isEmpty()
     assert wh.read("staging_product").isEmpty()
     assert wh.read("staging_provider_product").isEmpty()
+
+
 @pytest.mark.slow
-
-
 def test_ledger_skip_and_idempotent_rerun(spark, wh):
     r1 = process_csv_file(spark, wh, "c", "f.csv", csv_text=CSV)
     assert r1.success and not r1.skipped
@@ -83,9 +83,9 @@ def test_ledger_skip_and_idempotent_rerun(spark, wh):
         "pp": wh.read("provider_product").count(),
     }
     assert state1 == state3
+
+
 @pytest.mark.slow
-
-
 def test_product_upsert_updates_existing(spark, wh):
     process_csv_file(spark, wh, "c", "a.csv",
                      csv_text="Producto,Provedor,Precio\nArroz 500g,Prov,100\n")
@@ -99,9 +99,9 @@ def test_product_upsert_updates_existing(spark, wh):
     assert rows[0]["Id"] == v1["Id"]
     # two providers now reference the same product
     assert wh.read("provider_product").count() == 2
+
+
 @pytest.mark.slow
-
-
 def test_provider_synonym_resolution(spark, wh):
     # seed a provider + synonym: 'Canast' → Canasta
     process_csv_file(spark, wh, "c", "seed.csv",
@@ -165,9 +165,9 @@ def test_failed_file_marked_and_retryable(spark, wh):
 def test_header_gate_on_text_path(spark, wh):
     res = process_csv_text(spark, wh, "c", "nohdr.csv", "Producto,Precio\nX,1\n")
     assert not res.success and "missing" in res.message
+
+
 @pytest.mark.slow
-
-
 def test_invoice_archive_written_and_replayable(spark, wh, tmp_path):
     """etl_orchestrator.py:376-388 parity: the extracted CSV persists
     under {stem}_{guid8}.csv and replays through the CSV path."""
@@ -197,9 +197,9 @@ def test_bootstrap_seeds_file_status_and_new_tables(spark, wh):
     pf = wh.read("process_file")
     fs = wh.read("file_status").select(F.col("Id").alias("fsid"), "StatusName")
     assert pf.join(fs, pf.StatusId == fs.fsid).count() == pf.count()
+
+
 @pytest.mark.slow
-
-
 def test_incremental_merge_rewrites_only_touched_buckets(spark, wh):
     """Scale regression (VERDICT r01 #6): a merge batch must be
     O(batch), not O(table) — untouched fact-table bucket partitions
@@ -586,8 +586,8 @@ def test_generic_merge_into_bucket_scoped_rewrite(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from aquiles_etl_pipeline_spark.merge import Warehouse
-    from aquiles_etl_pipeline_spark.merge.generic import _bucket_expr, merge_into
+    from aquiles_etl_pipeline_spark.merge import Warehouse, bucket_of
+    from aquiles_etl_pipeline_spark.merge.generic import merge_into
 
     wh = Warehouse(spark, tmp_path / "gmb")
     base = spark.range(0, 200).select(
@@ -596,7 +596,7 @@ def test_generic_merge_into_bucket_scoped_rewrite(spark, tmp_path):
     )
     wh.overwrite(
         "t",
-        base.withColumn("_bucket", _bucket_expr(["id"])),
+        base.withColumn("_bucket", bucket_of("id")),
         partition_by=["_bucket"],
     )
     gen_before = wh._current("t")
@@ -613,7 +613,7 @@ def test_generic_merge_into_bucket_scoped_rewrite(spark, tmp_path):
     gen_after = wh._current("t")
     touched = {
         r[0]
-        for r in source.select(_bucket_expr(["id"]).alias("b")).collect()
+        for r in source.select(bucket_of("id").alias("b")).collect()
     }
     hardlinked = 0
     for d in gen_after.iterdir():
@@ -918,8 +918,8 @@ def test_generic_merge_into_aligns_source_key_dtypes(spark, tmp_path):
     int-keyed target row instead of silently re-inserting it."""
     from pyspark.sql import functions as F
 
-    from aquiles_etl_pipeline_spark.merge import Warehouse
-    from aquiles_etl_pipeline_spark.merge.generic import _bucket_expr, merge_into
+    from aquiles_etl_pipeline_spark.merge import Warehouse, bucket_of
+    from aquiles_etl_pipeline_spark.merge.generic import merge_into
 
     wh = Warehouse(spark, tmp_path / "gmdtype")
     base = spark.range(0, 50).select(
@@ -928,7 +928,7 @@ def test_generic_merge_into_aligns_source_key_dtypes(spark, tmp_path):
     )
     wh.overwrite(
         "t",
-        base.withColumn("_bucket", _bucket_expr(["id"])),
+        base.withColumn("_bucket", bucket_of("id")),
         partition_by=["_bucket"],
     )
     # source key is BIGINT (spark.range default), target key is INT
@@ -1024,14 +1024,15 @@ def test_generic_merge_into_bucketed_stats(spark, tmp_path):
     clauses, from a source of another session (as a foreachBatch
     micro-batch is), and on an empty source, whose touched-bucket read
     the optimizer empties: every count is 0 and none blocks."""
-    from aquiles_etl_pipeline_spark.merge.generic import _bucket_expr, merge_into
+    from aquiles_etl_pipeline_spark.merge import bucket_of
+    from aquiles_etl_pipeline_spark.merge.generic import merge_into
 
     wh = Warehouse(spark, tmp_path / "gmstats")
     base = spark.range(0, 40).select(
         F.col("id").cast("int").alias("id"), F.col("id").cast("int").alias("v")
     )
     wh.overwrite(
-        "t", base.withColumn("_bucket", _bucket_expr(["id"])), partition_by=["_bucket"]
+        "t", base.withColumn("_bucket", bucket_of("id")), partition_by=["_bucket"]
     )
     source = spark.newSession().createDataFrame(
         [(3, -3, "U"), (4, 0, "D"), (5, 0, "D"), (6, -6, "X"), (100, 1, "I"), (101, 2, "I")],

@@ -384,9 +384,9 @@ def test_bloom_semi_join_rejects_unmodeled_mixed_types(spark):
         ).collect()
     )
     assert got == [1]
+
+
 @pytest.mark.slow
-
-
 def test_range_join_pre1970_floor_buckets(spark):
     """Regression (ADVICE r04): `div` truncates toward zero, so bucket 0
     used to span (-bucket, +bucket) for negative epoch micros.  Floor

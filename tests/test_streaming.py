@@ -48,9 +48,9 @@ def _memory_query(df, name, output_mode):
         .outputMode(output_mode)
         .start()
     )
+
+
 @pytest.mark.slow
-
-
 def test_stream_ingest_files_exactly_once(spark, tmp_path):
     inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
     inp.mkdir()
@@ -108,9 +108,9 @@ def test_validate_and_land_reenters_stream_source(spark, tmp_path):
 
 def ledger_status(wh):
     return {(r["FileName"], r["StatusId"]) for r in wh.read("process_file").collect()}
+
+
 @pytest.mark.slow
-
-
 def test_stream_ingest_directory_single_merge(spark, tmp_path):
     inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
     inp.mkdir()
@@ -706,11 +706,12 @@ def test_session_kernel_out_of_order_and_null_cents():
     assert state.get == (t1, t1, 1, 1)
 
 
-def test_stream_batch_confs_sizing(spark, tmp_path):
+def test_stream_batch_confs_sizing(spark, tmp_path, monkeypatch):
     """stream_batch_confs sizes shuffle/state partitions to the landed
     input bytes (ceil(bytes/target), floor 1, cap 4x parallelism), floors
     at defaultParallelism for python_state drains, and restores the
     session confs on exit."""
+    from aquiles_etl_pipeline_spark import session
     from aquiles_etl_pipeline_spark.session import stream_batch_confs
 
     before_n = spark.conf.get("spark.sql.shuffle.partitions")
@@ -729,33 +730,69 @@ def test_stream_batch_confs_sizing(spark, tmp_path):
     assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
 
     # input-derived count: 3 target-sized chunks -> 3 partitions
-    with stream_batch_confs(spark, land, target_bytes=400):
+    monkeypatch.setattr(session, "PARTITION_BYTES", 400)
+    with stream_batch_confs(spark, land):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
 
     # python_state floors at defaultParallelism (per-group Python work
     # parallelizes across cores; input bytes do not bound it)
+    monkeypatch.setattr(session, "PARTITION_BYTES", 64 << 20)
     with stream_batch_confs(spark, land, python_state=True):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(par)
 
     # cap at 4x parallelism for any backlog size
-    with stream_batch_confs(spark, land, target_bytes=1):
+    monkeypatch.setattr(session, "PARTITION_BYTES", 1)
+    with stream_batch_confs(spark, land):
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(4 * par)
 
     # multiple inputs sum their bytes
     land2 = tmp_path / "land2"
     land2.mkdir()
     (land2 / "b.json").write_bytes(b"y" * 1000)
-    with stream_batch_confs(spark, land, land2, target_bytes=1000):
+    monkeypatch.setattr(session, "PARTITION_BYTES", 1000)
+    with stream_batch_confs(spark, land, land2):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+
+
+def test_stream_batch_confs_floor_when_input_unreadable(spark, tmp_path, monkeypatch, caplog):
+    """A landed file the driver cannot stat gives the drain its floor
+    count and a warning that names the path, instead of raising inside
+    the query."""
+    import logging
+    from pathlib import Path
+
+    from aquiles_etl_pipeline_spark.session import stream_batch_confs
+
+    land = tmp_path / "land"
+    land.mkdir()
+    (land / "a.json").write_bytes(b"x" * 1000)
+    real_stat = Path.stat
+
+    def stat(self, *args, **kwargs):
+        if self.name == "a.json":
+            raise PermissionError(13, "Permission denied", str(self))
+        return real_stat(self, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "stat", stat)
+    par = spark.sparkContext.defaultParallelism
+    with caplog.at_level(logging.WARNING, logger="aquiles_etl_pipeline_spark.session"):
+        with stream_batch_confs(spark, land):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        with stream_batch_confs(spark, land, python_state=True):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(par)
+    assert any(str(land) in r.getMessage() for r in caplog.records)
 
 
 @pytest.fixture()
 def tuner(spark, monkeypatch):
-    """The session module with a fresh dataset-switch memo; restores
-    the memo and the session's shuffle-partition count afterwards."""
+    """The session module with a fresh dataset-switch memo, acting as
+    in a session launched without a shuffle count (the test session
+    pins 8 at launch, which the tuner never overrides); restores the
+    memo and the session's shuffle-partition count afterwards."""
     from aquiles_etl_pipeline_spark import session
 
     monkeypatch.setattr(session, "_TUNED_DIR", {}, raising=False)
+    monkeypatch.setattr(session, "_pinned_at_launch", lambda spark: False)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     yield session
     spark.conf.set("spark.sql.shuffle.partitions", before)
@@ -823,6 +860,91 @@ def test_shuffle_tuner_logs_what_it_skips(spark, tmp_path, tuner, monkeypatch, c
         tuner.tune_batch_shuffle_partitions(spark, str(d))
     assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     assert any(str(d) in r.getMessage() for r in caplog.records)
+
+
+def test_package_shipping_failure_is_logged(spark, monkeypatch, caplog):
+    """Shipping the package to a session's workers never raises, but a
+    failure is logged with the exception, not swallowed."""
+    import logging
+
+    from aquiles_etl_pipeline_spark import session
+
+    def add_py_file(path):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", add_py_file)
+    with caplog.at_level(logging.WARNING, logger="aquiles_etl_pipeline_spark.session"):
+        session.ship_package_to_workers(spark)
+    assert any("OSError: disk full" in r.getMessage() for r in caplog.records)
+
+
+def _sized_dir(d, targets: int) -> None:
+    """Give dir ``d`` a sparse filler of ``targets`` 64 MB shuffle
+    targets (no disk used), so its input-derived count is targets + 1
+    (under the 4x-cores cap)."""
+    d.mkdir(exist_ok=True)
+    with open(d / "filler.bin", "wb") as f:
+        f.truncate((64 << 20) * targets)
+
+
+def test_launch_pinned_shuffle_count_survives_catalog_load(spark, tmp_path, monkeypatch):
+    """The test session is launched with 8 shuffle partitions; loading a
+    dataset whose input-derived count differs (3) keeps 8, so plan
+    shapes follow the caller's count, not the machine's cores."""
+    import pandas as pd
+
+    from aquiles_etl_pipeline_spark import session
+
+    monkeypatch.setattr(session, "_TUNED_DIR", {})
+    assert spark.sparkContext.getConf().get("spark.sql.shuffle.partitions") == "8"
+    d = tmp_path / "sized"
+    _sized_dir(d, 2)
+    pd.DataFrame({"x": [1, 2]}).to_parquet(d / "t.parquet")
+    load(spark, str(d), "t")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def _nanos_events(d) -> None:
+    """An ``events`` table whose ts is INT64 TIMESTAMP(NANOS)."""
+    import pandas as pd
+
+    pd.DataFrame(
+        {
+            "event_id": [1, 2],
+            "ts": pd.to_datetime(["2024-03-15 12:30:45.123456789", "2024-03-16 00:00:00.000000000"]),
+        }
+    ).to_parquet(d / "events.parquet", version="2.6", coerce_timestamps=None)
+
+
+def test_catalog_load_of_events_sets_no_conf(spark, tmp_path, monkeypatch):
+    """Loading ``events`` (nanos timestamps, from a dir whose size would
+    retune the count) is a pure read: the session's confs are the same
+    before and after, and the nanos come back as floor-truncated
+    microsecond timestamps."""
+    from aquiles_etl_pipeline_spark import session
+
+    monkeypatch.setattr(session, "_TUNED_DIR", {})
+    d = tmp_path / "ev"
+    _sized_dir(d, 4)
+    _nanos_events(d)
+    before = spark.conf.getAll
+    df = load(spark, str(d), "events")
+    assert spark.conf.getAll == before
+    assert [r.ts for r in df.orderBy("event_id").collect()] == [
+        datetime(2024, 3, 15, 12, 30, 45, 123456),
+        datetime(2024, 3, 16),
+    ]
+
+
+def test_nanos_parquet_reads_in_a_fresh_session(spark, tmp_path):
+    """A session of this launch reads INT64 TIMESTAMP(NANOS) parquet as
+    raw longs without any catalog load having set that up first."""
+    from pyspark.sql.types import LongType
+
+    _nanos_events(tmp_path)
+    df = spark.newSession().read.parquet(str(tmp_path / "events.parquet"))
+    assert isinstance(df.schema["ts"].dataType, LongType)
+    assert df.count() == 2
 
 
 def test_land_sentinel_single_parseable_file(spark, tmp_path):

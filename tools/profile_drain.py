@@ -38,9 +38,10 @@ def main() -> None:
     spark = get_spark(app_name="aquiles-profile-drain")
     spark.sparkContext.setLogLevel("ERROR")
 
+    from bench import _warm_streaming_state, force, resolve
+
     specs = registry()
-    by_short = {n.split("_", 1)[0]: n for n in specs}
-    names = [by_short.get(a, a) for a in args]
+    names = resolve(specs, args)
 
     captured: list[dict] = []
     orig_start = srw.DataStreamWriter.start
@@ -56,15 +57,12 @@ def main() -> None:
         # session warm-up mirrors bench.py: batch JIT + streaming boot
         first = next(iter(specs.values()))
         first.fn(spark, sf_dir).limit(1).collect()
-        from bench import _warm_streaming_state
-
         _warm_streaming_state(spark)
 
         for name in names:
             captured.clear()
             t0 = time.perf_counter()
-            df = specs[name].fn(spark, sf_dir)
-            df.collect() if len(df.columns) > 2 else df.count()
+            force(name, specs[name].fn(spark, sf_dir))
             total = time.perf_counter() - t0
             print(f"\n=== {name}: total {total:.2f}s, {len(captured)} drains ===")
             for i, cap in enumerate(captured):

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -36,38 +35,21 @@ def main() -> None:
     spark = get_spark(app_name="aquiles-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
 
+    from bench import _drop_result_memo, _run_once, resolve
+
     specs = registry()
-    by_short = {n.split("_", 1)[0]: n for n in specs}
-    names = []
-    for req in args:
-        full = by_short.get(req, req)
-        if full not in specs:
-            print(f"unknown query: {req}", file=sys.stderr)
-            continue
-        names.append(full)
+    names = resolve(specs, args)
 
     # session warm-up: JIT + codegen + python-worker daemon, charged to
     # nobody (bench.py does the same)
     first = next(iter(specs.values()))
     first.fn(spark, sf_dir).limit(1).collect()
 
-    def run_once(name: str) -> float:
-        spec = specs[name]
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        if len(df.columns) <= 2 or name.split("_")[0] in {"q14", "q15", "q16", "q18", "q24"}:
-            df.count()
-        else:
-            df.collect()
-        return time.perf_counter() - t0
-
-    from bench import _drop_result_memo
-
     for name in names:
         ts = []
         for _ in range(reps):
             _drop_result_memo(name)  # every rep a real run (see bench.py)
-            ts.append(run_once(name))
+            ts.append(_run_once(spark, sf_dir, name, specs[name]))
         print(
             f"{name}: min={min(ts):.2f}s  reps={[round(t, 2) for t in ts]}",
             flush=True,
