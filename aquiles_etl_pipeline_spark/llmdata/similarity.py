@@ -232,7 +232,7 @@ def exact_cosine_pairs(
 
     thr = float(threshold)
 
-    def tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = key
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         m = np.asarray(pdf["_vec"].tolist(), dtype=np.float64)

@@ -15,13 +15,15 @@ identity index (core/entities.py:106,116) and docs/ETL_ENHANCEMENTS.md:
   U1 UnitOfMeasure     — auto-create unseen acronyms before M2
   M3 Provider_Product  — upsert keyed on (ProductId, ProviderId) after
                          resolving FKs from denormalized staging names
-  S11 cleanup          — drop the batch's staging rows
 
-All merges are pure DataFrame joins against the batch's staging
-partition (pruned by BatchGuid) and are idempotent per batch: re-running
-the same batch_guid converges to the same table state — that is this
-engine's substitute for the reference's single cross-table SQL
-transaction (etl:171), which Delta/parquet cannot express.
+All merges are pure DataFrame joins against the batch's in-memory
+staging projections (staging.split.StagedBatch, lazy over the ingest
+chain's cached frame) and are idempotent per batch: re-running the
+same batch converges to the same table state — that is this engine's
+substitute for the reference's single cross-table SQL transaction
+(etl:171), which Delta/parquet cannot express.  The reference's S11
+staging cleanup has nothing to delete: staging tables are written only
+for a batch whose merge failed (sources.orchestrator.run_pipeline).
 
 Stats: M1 and U1 count their new rows before writing (the count gates
 the write).  M2 and M3 report ``inserted`` and ``total_source`` through
@@ -35,7 +37,7 @@ file-level rewrites on a real cluster (see warehouse.py seam).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,6 +47,9 @@ from ..functions import scalar
 from .observed import observe
 from .schemas import bucket_of
 from .warehouse import Warehouse
+
+if TYPE_CHECKING:
+    from ..staging import StagedBatch
 
 
 def _next_ids(existing: DataFrame, new_rows: DataFrame, order_col: str) -> DataFrame:
@@ -85,17 +90,11 @@ def _observed(merged: DataFrame) -> tuple[DataFrame, Callable[[], dict[str, int]
     return observed.drop("_op"), counts
 
 
-def _staging_batch(wh: Warehouse, table: str, batch_guid: str) -> DataFrame:
-    # BatchGuid partition pruning: Catalyst pushes this filter to the
-    # partitioned staging parquet, reading only this batch's files.
-    return wh.read(table).where(F.col("BatchGuid") == batch_guid)
-
-
-def merge_providers(wh: Warehouse, batch_guid: str) -> int:
+def merge_providers(wh: Warehouse, staging: DataFrame) -> int:
     """M1: insert staging provider names that match no provider and no
     synonym.  Returns the number inserted; the table is rewritten only
     when that is non-zero."""
-    staging = _staging_batch(wh, "staging_provider", batch_guid).select("Name").distinct()
+    staging = staging.select("Name").distinct()
     provider = wh.read("provider")
     synonyms = wh.read("provider_synonym")
 
@@ -120,14 +119,13 @@ def merge_providers(wh: Warehouse, batch_guid: str) -> int:
     return n
 
 
-def ensure_units_of_measure(wh: Warehouse, batch_guid: str) -> int:
+def ensure_units_of_measure(wh: Warehouse, staging: DataFrame) -> int:
     """U1 (docs/ETL_ENHANCEMENTS.md:23): create unseen units before the
     product merge; acronym aliases (UnitOfMeasureAcronym) resolve to
     existing units and are not duplicated.  Count-gated like
     :func:`merge_providers`."""
     staging = (
-        _staging_batch(wh, "staging_product", batch_guid)
-        .select(F.lower(F.col("UnitOfMeasure")).alias("Acronym"))
+        staging.select(F.lower(F.col("UnitOfMeasure")).alias("Acronym"))
         .where(F.col("Acronym").isNotNull())
         .distinct()
     )
@@ -166,14 +164,15 @@ def _resolve_uom(wh: Warehouse, df: DataFrame, unit_col: str) -> DataFrame:
     )
 
 
-def prepare_product_source(wh: Warehouse, batch_guid: str) -> tuple[DataFrame, list[int]]:
+def prepare_product_source(
+    wh: Warehouse, staging: DataFrame
+) -> tuple[DataFrame, list[int]]:
     """M2's staging-side prep, factored out so the chain can run it
-    CONCURRENTLY with M1/U1 (it reads only the staging partition — no
+    CONCURRENTLY with M1/U1 (it reads only the staged products — no
     dependency on providers or units): dedup the batch by
     DescriptionHash, persist it, and collect the touched fact-table
     buckets (the one driver round-trip the partition-scoped rewrite
     needs before it can prune its read)."""
-    staging = _staging_batch(wh, "staging_product", batch_guid)
     # one row per distinct description within the batch (T-SQL MERGE
     # requires a unique source; keep the first by deterministic order)
     w = Window.partitionBy("DescriptionHash").orderBy("Description", "Measure", "UnitOfMeasure")
@@ -312,7 +311,7 @@ def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, in
 
 
 def merge_provider_products(
-    wh: Warehouse, batch_guid: str, products: DataFrame
+    wh: Warehouse, staging: DataFrame, products: DataFrame
 ) -> dict[str, int]:
     """M3: resolve placeholder FKs from denormalized staging names
     (etl:151-152), then upsert keyed on (ProductId, ProviderId) —
@@ -324,7 +323,6 @@ def merge_provider_products(
     waiting for (or re-reading) the product parquet: every staged
     description's bucket is in M2's touched set by construction, so
     the mapping is complete."""
-    staging = _staging_batch(wh, "staging_provider_product", batch_guid)
     product = products.select(F.col("Id").alias("_product_id"), "DescriptionHash")
     provider = wh.read("provider").select(F.col("Id").alias("_provider_id"), "Name")
     synonyms = wh.read("provider_synonym").select(
@@ -411,17 +409,10 @@ def merge_provider_products(
     return counts()
 
 
-def _cleanup_staging(wh: Warehouse, batch_guid: str) -> None:
-    """S11 (etl:182-184): DELETE FROM staging WHERE BatchGuid = batch.
-    Partition-aligned delete → metadata-only DROP PARTITION, no scan."""
-    for t in ("staging_provider", "staging_product", "staging_provider_product"):
-        wh.delete_partition(t, "BatchGuid", batch_guid)
-
-
-def merge_staging_to_fact_tables(wh: Warehouse, batch_guid: str) -> dict[str, object]:
-    """etl:168-189 — the three merges + cleanup, honoring the reference's
+def merge_staging_to_fact_tables(wh: Warehouse, staged: StagedBatch) -> dict[str, object]:
+    """etl:168-189 — the three merges, honoring the reference's
     dependency order: M1 (providers) and U1 (units) touch disjoint
-    tables and staging partitions, so they submit CONCURRENTLY — along
+    tables and staging projections, so they submit CONCURRENTLY — along
     with M2's staging-side prep (dedup + touched-bucket collect), which
     depends on neither; M2's unit resolution then rides lazily inside
     its write job after U1 lands.  M3 (provider_products) needs M1's
@@ -431,22 +422,23 @@ def merge_staging_to_fact_tables(wh: Warehouse, batch_guid: str) -> dict[str, ob
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_prov = pool.submit(merge_providers, wh, batch_guid)
-        f_units = pool.submit(ensure_units_of_measure, wh, batch_guid)
-        f_prep = pool.submit(prepare_product_source, wh, batch_guid)
+        f_prov = pool.submit(merge_providers, wh, staged.providers)
+        f_units = pool.submit(ensure_units_of_measure, wh, staged.products)
+        f_prep = pool.submit(prepare_product_source, wh, staged.products)
         providers, units, (src0, touched) = f_prov.result(), f_units.result(), f_prep.result()
     plan = plan_product_merge(wh, src0, touched)
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_m2 = pool.submit(commit_product_merge, wh, plan)
-            f_m3 = pool.submit(merge_provider_products, wh, batch_guid, plan.final)
+            f_m3 = pool.submit(
+                merge_provider_products, wh, staged.provider_products, plan.final
+            )
             products, provider_products = f_m2.result(), f_m3.result()
     finally:
         # release even when a merge fails: the persisted final/src
         # frames otherwise pin executor storage for the session's life,
         # and failed batches retry
         plan.release()
-    _cleanup_staging(wh, batch_guid)
     return {
         "providers_inserted": providers,
         "units_created": units,

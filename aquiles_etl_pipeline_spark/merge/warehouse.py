@@ -12,12 +12,15 @@ Delta/Iceberg tables (ACID MERGE INTO, time travel) without touching
 the merge-job logic, which is pure DataFrame code.  Parquet snapshots
 keep the container dependency-free (no delta-spark available here).
 
-Scale posture: staging tables are written partitioned by batch_guid so
-merge jobs prune to one partition; fact-table rewrite is the local-mode
-stand-in for Delta MERGE's file-level rewrite.  Empty snapshots are a
+Scale posture: fact-table rewrite is the local-mode stand-in for Delta
+MERGE's file-level rewrite; staging tables are written (partitioned by
+BatchGuid) only for a batch whose merge failed.  Empty snapshots are a
 schema marker file, not a Spark write job — bootstrapping a warehouse
 launches zero jobs, and reading an empty table yields a local relation
-(which Catalyst folds into trivially-broadcast join sides).
+(which Catalyst folds into trivially-broadcast join sides).  Small
+control tables (lookups, the ProcessFile ledger) are read and written
+on the driver with pyarrow (:meth:`read_local`, :meth:`overwrite_local`)
+and never launch a Spark job.
 """
 
 from __future__ import annotations
@@ -291,24 +294,65 @@ class Warehouse:
         return cur is None or (cur / _EMPTY_MARKER).exists()
 
     def seed_rows(self, name: str, schema: StructType, rows: list[tuple]) -> None:
-        """Seed a tiny lookup table with a DRIVER-SIDE pyarrow parquet
-        write — no Spark job, preserving the zero-job bootstrap
-        contract.  No-op if the table already holds data."""
-        if self.exists(name):
-            cur = self._current(name)
-            if cur is not None and not (cur / _EMPTY_MARKER).exists():
-                return
+        """Seed a tiny lookup table with a driver-side write
+        (:meth:`overwrite_local`) — no Spark job, preserving the
+        zero-job bootstrap contract.  No-op if the table already holds
+        data."""
+        if not self.is_empty(name):
+            return
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        table = pa.Table.from_pylist(
-            [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+        self.overwrite_local(
+            name,
+            pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+            ),
         )
+
+    def read_local(self, name: str, filter=None) -> "pa.Table":
+        """Read the current snapshot of a small unpartitioned table into
+        the driver as a pyarrow table — no Spark job.  ``filter`` is a
+        ``pyarrow.compute`` expression applied while reading.  Columns
+        are cast to the table's stored Spark schema, so a generation
+        Spark wrote (INT96 timestamps) reads back as the same UTC
+        instants a pyarrow-written one holds."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cur = self._current(name)
+        if cur is None:
+            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        marker = cur / _EMPTY_MARKER
+        if marker.exists():
+            schema = StructType.fromJson(json.loads(marker.read_text()))
+            return to_arrow_schema(schema).empty_table()
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        files = sorted(str(f) for f in cur.glob("part-*"))
+        table = ds.dataset(files, format=fmt).to_table(filter=filter)
+        stored = self._stored_schema(cur)
+        if stored is None:
+            return table
+        return table.select(stored.names).cast(to_arrow_schema(stored))
+
+    def overwrite_local(self, name: str, table: "pa.Table") -> None:
+        """Driver-side counterpart of :meth:`overwrite` for small
+        unpartitioned tables (lookups, the ProcessFile ledger): one
+        parquet file per generation plus its stored schema, then the
+        pointer flip.  No Spark job; Spark reads the result like any
+        other generation."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         gen, old = self._new_gen(name)
         gen.mkdir(parents=True, exist_ok=True)
-        pq.write_table(table, gen / "part-00000-seed.parquet")
-        self._write_partition_spec(gen, None, schema)
+        # no dictionary pages: control-table keys are near-unique, so
+        # dictionary encoding only costs time and bytes (half the write
+        # time of a 100k-row ledger)
+        pq.write_table(table, gen / "part-00000-local.parquet", use_dictionary=False)
+        self._write_partition_spec(gen, None, from_arrow_schema(table.schema))
         self._flip(name, gen, old)
 
     def overwrite(
@@ -470,22 +514,13 @@ class Warehouse:
         meta = cur / "_WRITE_META.json"
         return json.loads(meta.read_text()) if meta.exists() else None
 
-    def _link_files(
-        self,
-        src: Path,
-        dest: Path,
-        skip_top: str | None = None,
-        only_top: str | None = None,
-    ) -> bool:
+    def _link_files(self, src: Path, dest: Path, only_top: str | None = None) -> bool:
         """Hardlink src's data files into dest, preserving partition
-        paths.  ``skip_top`` excludes one top-level partition dir;
-        ``only_top`` restricts to one.  Returns True if any file was
-        linked."""
+        paths.  ``only_top`` restricts to one top-level partition dir.
+        Returns True if any file was linked."""
         linked = False
         for f in src.rglob("part-*"):
             rel = f.relative_to(src)
-            if skip_top is not None and rel.parts[0] == skip_top:
-                continue
             if only_top is not None and rel.parts[0] != only_top:
                 continue
             target = dest / rel
@@ -683,23 +718,6 @@ class Warehouse:
         self._write_partition_spec(gen, spec, schema)
         self._flip(name, gen, old)
         return stats
-
-    def delete_partition(self, name: str, col: str, value: str) -> None:
-        """Drop one partition directory from the current snapshot — a
-        metadata-only operation (Hive/Delta DROP PARTITION): the new
-        generation hardlinks every data file except the dropped
-        partition's.  No Spark job runs."""
-        cur = self._current(name)
-        if cur is None or (cur / _EMPTY_MARKER).exists():
-            return
-        schema = self._stored_schema(cur) or self.spark.read.parquet(str(cur)).schema
-        gen, old = self._new_gen(name)
-        gen.mkdir(parents=True, exist_ok=True)
-        if self._link_files(cur, gen, skip_top=f"{col}={value}"):
-            self._write_partition_spec(gen, self._partition_spec(cur), schema)
-        else:
-            (gen / _EMPTY_MARKER).write_text(json.dumps(schema.jsonValue()))
-        self._flip(name, gen, old)
 
     def history(self, name: str) -> list[dict]:
         """Snapshot log (Delta DESCRIBE HISTORY analog): one entry per

@@ -13,11 +13,13 @@ points (SURVEY.md §3) re-expressed over the Spark pipeline:
 from __future__ import annotations
 
 import io
+import logging
 import uuid
 from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import ledger
 from ..merge.upserts import merge_staging_to_fact_tables
@@ -27,8 +29,10 @@ from ..pipeline import (
     map_columns_to_apply_transformations,
     validate_csv_headers,
 )
-from ..staging import load_data_to_staging_tables
+from ..staging import load_data_to_staging_tables, write_staging_tables
 from .extractor import InvoiceExtractor
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -65,17 +69,41 @@ def run_pipeline(
     directory ingest and q41 all run it.  Returns (batch GUID, rows,
     staging counts, merge stats).  A frame whose rows all drop in the
     transform stages and merges nothing: it returns 0 rows and no GUID,
-    and the caller decides whether that is an error."""
+    and the caller decides whether that is an error.
+
+    Staging stays in memory: the merge reads the staged projections of
+    the cached transform.  When the merge raises, the batch is written
+    to the staging tables under its GUID, where the reference's rolled-
+    back transaction leaves it, and the merge's exception propagates."""
     df = map_columns_to_apply_transformations(df)
     transformed = apply_transformations(df, mode=mode)
     transformed = transformed.cache()
     try:
-        n_rows = transformed.count()
+        # one job fills the cache and yields every staging count: the
+        # product projections keep every row, the provider one the
+        # distinct non-null names
+        sizes = transformed.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.count_distinct("CleanProviderName").alias("providers"),
+        ).first()
+        n_rows = sizes["rows"]
         if n_rows == 0:
             return None, 0, {}, {}
         batch_guid = str(uuid.uuid4())  # etl:323 — one GUID per file
-        staging_counts = load_data_to_staging_tables(wh, transformed, batch_guid)
-        merge_stats = merge_staging_to_fact_tables(wh, batch_guid)
+        staged = load_data_to_staging_tables(transformed, batch_guid)
+        staging_counts = {
+            "providers": sizes["providers"],
+            "products": n_rows,
+            "provider_products": n_rows,
+        }
+        try:
+            merge_stats = merge_staging_to_fact_tables(wh, staged)
+        except Exception:
+            try:
+                write_staging_tables(wh, staged)
+            except Exception:  # noqa: BLE001 — the merge's error is the one to report
+                _log.exception("could not stage failed batch %s", batch_guid)
+            raise
     finally:
         transformed.unpersist()
     return batch_guid, n_rows, staging_counts, merge_stats

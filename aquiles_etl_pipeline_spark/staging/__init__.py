@@ -1,3 +1,3 @@
-from .split import load_data_to_staging_tables
+from .split import StagedBatch, load_data_to_staging_tables, write_staging_tables
 
-__all__ = ["load_data_to_staging_tables"]
+__all__ = ["StagedBatch", "load_data_to_staging_tables", "write_staging_tables"]

@@ -7,30 +7,40 @@ UnitPrice=0, and a denormalized provider-product projection carrying
 ProductDescription/ProviderName/Price for later key resolution
 (placeholder FKs 0, "will be updated in merge process", etl:151-152).
 
-Scale: staging tables are partitioned by BatchGuid so downstream merges
-prune to the one partition they own; the distinct on providers is the
-only shuffle in the split.  The three row counts ride on the three write
-jobs as ``Observation`` metrics (merge.observed), so counting costs no
-job of its own.
+Staging is in memory: the three projections of the caller's cached
+frame go straight to the merge (the reference's own aim, "CSV →
+Transform → In-Memory DataFrame → Staging"), so a file that merges
+leaves no staging rows behind, exactly as the reference's post-merge
+DELETE does (etl:182-184).  Only a batch whose merge fails is written
+to the three staging tables (:func:`write_staging_tables`), partitioned
+by BatchGuid — the rows the reference leaves visible for audit when its
+merge transaction rolls back.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..merge.observed import observe
 from ..merge.schemas import DEC
 from ..merge.warehouse import Warehouse
 
 
-def load_data_to_staging_tables(
-    wh: Warehouse, df: DataFrame, batch_guid: str
-) -> dict[str, int]:
-    """Returns inserted-row counts per staging table (reference logs the
-    same).  An empty ``df`` stages nothing and counts zeros (etl:63-66);
-    the ingest chain never gets that far with one (see
-    sources.orchestrator.run_pipeline)."""
+@dataclass(frozen=True)
+class StagedBatch:
+    """One batch's three staging projections, lazy over one frame."""
+
+    batch_guid: str
+    providers: DataFrame
+    products: DataFrame
+    provider_products: DataFrame
+
+
+def load_data_to_staging_tables(df: DataFrame, batch_guid: str) -> StagedBatch:
+    """Stamp ``df``'s rows with ``batch_guid`` and split them into the
+    three staging projections.  Builds plans only: no Spark job."""
     guid = F.lit(batch_guid)
 
     # etl:111-122 — distinct non-null CleanProviderName
@@ -63,36 +73,15 @@ def load_data_to_staging_tables(
         F.col("CleanPrice").cast(DEC).alias("Price"),
         guid.alias("BatchGuid"),
     )
+    return StagedBatch(batch_guid, providers, products, provider_products)
 
-    # three independent tables fed from one cached frame: submit the
-    # write jobs concurrently (Spark's scheduler runs them in parallel;
-    # the per-job fixed overhead — codegen, commit protocol — overlaps
-    # instead of serializing).  Coalesce the file count: staging
-    # batches are file-sized, and every downstream merge scans these —
-    # 32 shards of a 20k-row batch cost more in task scheduling than
-    # they buy in parallelism (sized to parallelism/4 so a cluster-
-    # scale micro-batch still writes wide).
-    from concurrent.futures import ThreadPoolExecutor
 
-    n_out = max(8, wh.spark.sparkContext.defaultParallelism // 4)
-    writes = [
-        ("providers", "staging_provider", providers),
-        ("products", "staging_product", products),
-        ("provider_products", "staging_provider_product", provider_products),
-    ]
-    observed = {
-        key: observe(frame, F.count(F.lit(1)).alias("n")) for key, _, frame in writes
-    }
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(
-                wh.append,
-                table,
-                observed[key][0].coalesce(n_out),
-                partition_by=["BatchGuid"],
-            )
-            for key, table, _ in writes
-        ]
-        for f in futures:
-            f.result()
-    return {key: counts()["n"] for key, (_, counts) in observed.items()}
+def write_staging_tables(wh: Warehouse, staged: StagedBatch) -> None:
+    """Append the batch to the three staging tables under its BatchGuid
+    partition (file-level appends: O(batch), see ``Warehouse.append``)."""
+    for table, frame in (
+        ("staging_provider", staged.providers),
+        ("staging_product", staged.products),
+        ("staging_provider_product", staged.provider_products),
+    ):
+        wh.append(table, frame, partition_by=["BatchGuid"])

@@ -147,16 +147,15 @@ def stream_ingest_directory(
         infos = [
             ledger.FileInfo(container, p.rsplit("/", 1)[-1]) for p in file_paths
         ]
-        for info in infos:
-            ledger.mark_in_progress(wh, info)
+        # one ledger generation per transition, however many files
+        ledger.mark_in_progress(wh, *infos)
         try:
             # a micro-batch whose rows all drop in the transform is a
             # 0-row success, not an empty-file failure
             batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(
                 wh, batch_df.drop("_file_path"), mode
             )
-            for info in infos:
-                ledger.mark_success(wh, info)
+            ledger.mark_success(wh, *infos)
             stats.results.append(
                 ProcessingResult(
                     True,
@@ -168,8 +167,7 @@ def stream_ingest_directory(
                 )
             )
         except Exception as exc:  # noqa: BLE001 — etl:338-350 failure contract
-            for info in infos:
-                ledger.mark_failed(wh, info)
+            ledger.mark_failed(wh, *infos)
             stats.results.append(
                 ProcessingResult(False, f"{type(exc).__name__}: {exc}")
             )

@@ -2,7 +2,9 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -54,3 +56,23 @@ def spark():
 @pytest.fixture()
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@contextmanager
+def jobs_launched(spark):
+    """Count the Spark jobs submitted inside the block, from every
+    thread: the DAG scheduler's job-id allocator, read before and after
+    (perfbench/spans.py reads it the same way).  ``launched.jobs`` is
+    set when the block exits::
+
+        with jobs_launched(spark) as launched:
+            ...
+        assert launched.jobs == 0
+    """
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    launched = SimpleNamespace(jobs=None)
+    first = int(dag.nextJobId())
+    try:
+        yield launched
+    finally:
+        launched.jobs = int(dag.nextJobId()) - first

@@ -329,6 +329,17 @@ def test_exact_cosine_pairs_builds_lazily_no_driver_collect(spark, emb):
     assert "FlatMapGroupsInPandas" in plan, "tile GEMM not planned as a grouped map"
 
 
+def test_exact_cosine_pairs_infers_its_eval_type(spark, emb):
+    """The tile function's type hints are complete, so applyInPandas
+    infers the grouped-map eval type instead of warning."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        similarity.exact_cosine_pairs(emb, threshold=0.5, n_blocks=2)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_assign_splits_stable_and_proportional(spark, docs):
     out1 = {r["doc_id"]: r["split"] for r in sampling.assign_splits(docs).collect()}
     out2 = {r["doc_id"]: r["split"] for r in sampling.assign_splits(docs).collect()}

@@ -6,6 +6,7 @@ ledger lifecycle, and batch idempotency."""
 from __future__ import annotations
 
 import threading
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -1063,30 +1064,159 @@ def test_generic_merge_into_bucketed_stats(spark, tmp_path):
     assert wh.read("t").count() == 40
 
 
-def test_staging_counts_survive_append_fallback_from_another_session(spark, wh):
-    """A staging table whose stored schema diverges is rewritten through
-    Warehouse.append's union fallback.  The staged frame may belong to
-    another session (a foreachBatch micro-batch does), and its counts
-    must still arrive: the rewrite has to run in that frame's session."""
-    from aquiles_etl_pipeline_spark.pipeline import (
-        apply_transformations,
-        map_columns_to_apply_transformations,
-    )
-    from aquiles_etl_pipeline_spark.staging import load_data_to_staging_tables
+def test_staging_counts_survive_append_fallback_from_another_session(
+    spark, wh, monkeypatch
+):
+    """The staged frames may belong to another session (a foreachBatch
+    micro-batch does).  Their staging counts must still arrive, and no
+    merge count may fall back to a recompute.  When such a batch's merge
+    fails it is written to a staging table whose stored schema diverges,
+    so Warehouse.append's union fallback rewrites it, and that rewrite
+    has to keep both batches' rows."""
+    from aquiles_etl_pipeline_spark.merge import observed
+    from aquiles_etl_pipeline_spark.sources import orchestrator
 
+    recomputed = []
+    monkeypatch.setattr(observed._log, "warning", lambda *a: recomputed.append(a))
     legacy = spark.createDataFrame(
         [("Old", 1, "b0")], "Name string, Legacy int, BatchGuid string"
     )
     wh.overwrite("staging_provider", legacy, partition_by=["BatchGuid"])
     header, *rows = [line.split(",") for line in CSV.strip().split("\n")]
     raw = spark.newSession().createDataFrame(rows, header)
-    df = apply_transformations(map_columns_to_apply_transformations(raw))
 
-    counts = _within(lambda: load_data_to_staging_tables(wh, df, "b1"), seconds=300)
+    _, _, counts, _ = _within(lambda: orchestrator.run_pipeline(wh, raw), seconds=300)
     assert counts == {"providers": 2, "products": 3, "provider_products": 3}
+    assert not recomputed
+
+    guids = []
+
+    def failing_merge(wh, staged):
+        guids.append(staged.batch_guid)
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(orchestrator, "merge_staging_to_fact_tables", failing_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        _within(lambda: orchestrator.run_pipeline(wh, raw), seconds=300)
     staged = wh.read("staging_provider")
-    assert staged.where(F.col("BatchGuid") == "b1").count() == 2
+    assert staged.where(F.col("BatchGuid") == guids[0]).count() == 2
     assert staged.where(F.col("BatchGuid") == "b0").count() == 1
+
+
+def test_ledger_lookup_and_transitions_launch_no_job(spark, wh):
+    """The ledger is a driver-side table: the skip gate and two status
+    changes launch no Spark job, and Spark reads back the same row and
+    the same instants."""
+    from conftest import jobs_launched
+
+    info = ledger.FileInfo("c", "f.csv", blob_size=10)
+    with jobs_launched(spark) as launched:
+        assert not ledger.already_processed(wh, "c", "f.csv")
+        ledger.mark_in_progress(wh, info)
+        ledger.mark_success(wh, info)
+        assert ledger.already_processed(wh, "c", "f.csv")
+    assert launched.jobs == 0
+
+    local = wh.read_local("process_file").to_pylist()
+    assert len(local) == 1
+    row = local[0]
+    assert (row["Id"], row["Container"], row["FileName"], row["StatusId"], row["BlobSize"]) == (
+        1, "c", "f.csv", 3, 10,
+    )
+    assert row["CreatedDt"] <= row["ProcessDt"] == row["LastModifiedDt"]
+    micros = (
+        wh.read("process_file")
+        .select(*[F.unix_micros(c).alias(c) for c in ("ProcessDt", "CreatedDt", "LastModifiedDt")])
+        .first()
+    )
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    for c in ("ProcessDt", "CreatedDt", "LastModifiedDt"):
+        assert micros[c] == (row[c] - epoch) // timedelta(microseconds=1)
+
+
+def test_spark_written_ledger_survives_a_driver_side_transition(spark, wh):
+    """A ledger Spark wrote (INT96 timestamps) keeps every row, Id and
+    instant when a new key is appended driver-side, and the new key gets
+    the next Id."""
+    import pyarrow.parquet as pq
+
+    from aquiles_etl_pipeline_spark.merge.schemas import PROCESS_FILE
+
+    t1 = datetime(2024, 3, 15, 10, 30, 0, 123456)
+    t2 = datetime(2025, 1, 2, 23, 59, 59, 999999)
+    legacy = spark.createDataFrame(
+        [
+            (1, "c", "a.csv", 3, t1, 5, None, t1, t1, None, None),
+            (2, "c", "b.csv", 4, t2, None, "text/csv", t1, t2, "e1", "m1"),
+        ],
+        PROCESS_FILE,
+    )
+    wh.overwrite("process_file", legacy)
+    part = next(wh._current("process_file").glob("part-*"))
+    footer = pq.ParquetFile(part).schema
+    assert footer.column(footer.names.index("ProcessDt")).physical_type == "INT96"
+    micros = [F.unix_micros(c).alias(c) for c in ("ProcessDt", "CreatedDt", "LastModifiedDt")]
+
+    def spark_rows():
+        return {
+            r["FileName"]: r.asDict()
+            for r in wh.read("process_file")
+            .select("Id", "FileName", "StatusId", "BlobSize", "ETag", *micros)
+            .collect()
+        }
+
+    before = spark_rows()
+    ledger.mark_in_progress(wh, ledger.FileInfo("c", "new.csv"))
+    after = spark_rows()
+    assert {k: after[k] for k in before} == before
+    assert after["new.csv"]["Id"] == 3 and after["new.csv"]["StatusId"] == 2
+    local = {r["FileName"]: r for r in wh.read_local("process_file").to_pylist()}
+    assert local["a.csv"]["Id"] == 1 and local["b.csv"]["StatusId"] == 4
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    for name in ("a.csv", "b.csv"):
+        for c in ("ProcessDt", "CreatedDt", "LastModifiedDt"):
+            assert (local[name][c] - epoch) // timedelta(microseconds=1) == before[name][c]
+
+
+def test_successful_ingest_writes_no_staging(spark, wh):
+    """Staging is in memory: a file that merges adds no generation to
+    any staging table."""
+    tables = ("staging_provider", "staging_product", "staging_provider_product")
+    before = {t: wh.history(t) for t in tables}
+    res = process_csv_file(spark, wh, "c", "f.csv", csv_text=CSV)
+    assert res.success, res.message
+    assert {t: wh.history(t) for t in tables} == before
+
+
+def test_failed_merge_leaves_batch_in_staging(spark, wh, monkeypatch):
+    """A merge that raises leaves the batch's rows in all three staging
+    tables under its BatchGuid, written after the merge failed (the
+    merge itself never reads staging tables), and the ledger at
+    Failed."""
+    from aquiles_etl_pipeline_spark.merge import upserts
+
+    tables = ("staging_provider", "staging_product", "staging_provider_product")
+    empty_during_merge = []
+
+    def failing_m3(wh, *args):
+        empty_during_merge.extend(wh.is_empty(t) for t in tables)
+        raise RuntimeError("M3 failed")
+
+    monkeypatch.setattr(upserts, "merge_provider_products", failing_m3)
+    res = process_csv_file(spark, wh, "c", "bad_merge.csv", csv_text=CSV)
+    assert not res.success and "M3 failed" in res.message
+    assert empty_during_merge == [True, True, True]
+    assert ledger.get_status(wh, "c", "bad_merge.csv") == 4
+    staged = {
+        t: {r["BatchGuid"]: r["count"] for r in wh.read(t).groupBy("BatchGuid").count().collect()}
+        for t in tables
+    }
+    (guid,) = staged["staging_provider"]
+    assert staged == {
+        "staging_provider": {guid: 2},
+        "staging_product": {guid: 3},
+        "staging_provider_product": {guid: 3},
+    }
 
 
 def test_observed_counts_recompute_when_the_metrics_never_arrive(spark, monkeypatch):

@@ -157,6 +157,28 @@ def test_stream_ingest_directory_all_rows_dropped_is_zero_row_success(
     assert ledger_status(wh) == {("a.csv", 3)}
 
 
+def test_stream_ingest_directory_ledger_writes_once_per_transition(spark, tmp_path):
+    """A micro-batch of three files moves the ledger with one write per
+    transition (in progress, then success), not one per file."""
+    inp, ckpt = tmp_path / "in", tmp_path / "ckpt"
+    inp.mkdir()
+    wh = Warehouse(spark, tmp_path / "wh")
+    bootstrap(wh)
+    for name, text in (("a.csv", CSV_A), ("b.csv", CSV_B), ("c.csv", CSV_C)):
+        (inp / name).write_text(text)
+
+    def generation():
+        return int(wh._current("process_file").name[1:])
+
+    before = generation()
+    stats = stream_ingest_directory(spark, wh, str(inp), str(ckpt))
+    assert len(stats.results) == 1 and stats.results[0].success
+    assert generation() == before + 2
+    assert ledger_status(wh) == {("a.csv", 3), ("b.csv", 3), ("c.csv", 3)}
+    ids = {r["FileName"]: r["Id"] for r in wh.read("process_file").collect()}
+    assert ids == {"a.csv": 1, "b.csv": 2, "c.csv": 3}
+
+
 def test_tumbling_streaming_matches_batch(spark, tmp_path):
     events = load(spark, SF, "events")
     src_dir = tmp_path / "events_src"
