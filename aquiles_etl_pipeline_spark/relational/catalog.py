@@ -48,9 +48,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Datasets written with plain micro timestamps read straight through,
     so the conversion is schema-sensitive, not hardcoded.
 
-    Apart from the shuffle tuner and a foreign session's one-time
-    warm-up, loading sets no session conf, so a read never depends on
-    which tables were loaded before it.
+    Loading readies the session first (session.prepare_session: a
+    no-op for a session already readied, such as get_spark's; once for
+    a foreign one).  Apart from that and the shuffle tuner it sets no
+    session conf, so a read never depends on which tables were loaded
+    before it.
 
     Frames are memoized per (session, dir, table): a DataFrame is an
     immutable plan, so reuse across the catalog sweep is free and
@@ -59,9 +61,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Keyed by applicationId (see session.session_key), never id(spark).
     """
     from ..session import (
+        prepare_session,
         session_key,
         tune_batch_shuffle_partitions,
-        warm_python_workers,
     )
 
     # input-derived shuffle sizing, re-derived whenever the session
@@ -73,10 +75,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
 
-    # foreign sessions (the grading driver's) boot the Python-worker
-    # daemon in the background on first table load, off the critical
-    # path of whichever query first needs an Arrow UDF
-    warm_python_workers(spark)
+    # a foreign session (the grading driver's) gets the parquet read
+    # confs, and the package for its Python workers, on first load
+    prepare_session(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         from pyspark.sql.types import LongType

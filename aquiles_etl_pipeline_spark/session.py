@@ -5,8 +5,9 @@ Replaces the reference's connection bootstrap
 probe): Spark owns connections/retries, so the only bootstrap we need is a
 well-configured session. Tuned for local[N] testing but every setting is
 cluster-sane (AQE, broadcast threshold, shuffle partitions sized to cores).
-This module is the only code that decides ``spark.sql.shuffle.partitions``
-(see get_spark for the precedence order).
+Every session, launched here or not, is readied once by
+:func:`prepare_session`.  This module is the only code that decides
+``spark.sql.shuffle.partitions`` (see get_spark for the precedence order).
 """
 
 from __future__ import annotations
@@ -21,20 +22,18 @@ from pyspark.sql import SparkSession
 
 _log = logging.getLogger(__name__)
 
-_WARMED_SESSIONS: set[str] = set()
-
 
 def session_key(spark: SparkSession) -> str:
     """Stable identity for per-session memoization: the underlying
     SparkContext's applicationId.  ``id(spark)`` is unsafe as a cache
     key — CPython reuses a garbage-collected session's address, which
     would alias a FRESH session to a dead one's cache entries (a
-    warm-state skip on a session that still needs the package zip, a
-    table-cache hit on a catalog that never saw the table).  The
-    applicationId lives exactly as long as the JVM context owning all
-    the cached state, and sessions sharing a context share that state
-    (daemon, addPyFile, saveAsTable catalog), so sharing the cache
-    entry is correct."""
+    :func:`prepare_session` skip on a session whose workers still need
+    the package zip, a table-cache hit on a catalog that never saw the
+    table).  The applicationId lives exactly as long as the JVM context
+    owning all the cached state, and sessions sharing a context share
+    that state (Python workers, addPyFile, saveAsTable catalog), so
+    sharing the cache entry is correct."""
     return spark.sparkContext.applicationId
 
 
@@ -246,11 +245,17 @@ def tune_batch_shuffle_partitions(spark: SparkSession, data_dir: str) -> None:
 # raw longs, not an error (catalog.load converts `events`).  Naive
 # timestamps read as TIMESTAMP, not TIMESTAMP_NTZ: event-time watermarks
 # and unix_micros() reject NTZ, and under UTC both carry the same
-# wall-clock values (matching DuckDB's naive rendering).
+# wall-clock values (matching DuckDB's naive rendering).  Launch confs of
+# get_spark, so its sessions' siblings (``newSession()``) start with them
+# too; prepare_session sets them on every session, foreign ones included.
 _PARQUET_READ_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
+
+# the directory holding this package: on a worker's PYTHONPATH, it
+# imports the package from the source tree
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -258,7 +263,8 @@ def get_spark(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """Build (or reuse) a SparkSession with engine defaults, readied by
+    :func:`prepare_session`.
 
     Scale posture: AQE on (runtime coalesce + skew-join splitting),
     shuffle partitions sized to the parallelism actually available
@@ -273,17 +279,13 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or f"local[{cpus}]"
 
-    # Preloading worker daemon: forked Python workers inherit pandas/
-    # pyarrow already imported (copy-on-write), so the first Arrow UDF
-    # stage doesn't serialize a wave of cold `import pandas` across
-    # every task slot (~4 s on 32 slots).  Workers resolve the module
-    # via PYTHONPATH, which must carry this package's parent dir —
-    # set BEFORE the JVM launches so the daemon process inherits it.
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # Python workers of a local session run with the JVM's PYTHONPATH:
+    # exported BEFORE the JVM launches, the package's parent lets them
+    # import this package from its source tree (see prepare_session)
     existing = os.environ.get("PYTHONPATH", "")
-    if pkg_parent not in existing.split(os.pathsep):
+    if _PKG_PARENT not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = (
-            pkg_parent + (os.pathsep + existing if existing else "")
+            _PKG_PARENT + (os.pathsep + existing if existing else "")
         )
 
     builder = (
@@ -298,7 +300,6 @@ def get_spark(
         # path: let the ContextCleaner delete checkpoint files once their
         # RDD is collected, so long sessions don't accumulate them
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.python.daemon.module", "aquiles_etl_pipeline_spark.worker_daemon")
         # local mode: the driver heap IS the whole executor heap; 8g
         # starves 32 cores' worth of caches + broadcast + shuffle and
         # showed up as 2x wall-time GC degradation over a bench sweep
@@ -310,44 +311,69 @@ def get_spark(
     spark = builder.getOrCreate()
     if not _pinned_at_launch(spark):
         spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
-    warm_python_workers(spark)
+    prepare_session(spark)
     return spark
 
 
-def ship_package_to_workers(spark: SparkSession) -> None:
-    """Make this package importable by Python WORKERS of a foreign
-    session.
+# session keys prepare_session has readied
+_PREPARED: set[str] = set()
 
-    Our own sessions export PYTHONPATH before the JVM launches (see
-    get_spark), but a foreign session (the correctness driver's, a
-    notebook's) may have been built from any cwd — its workers then
-    fail `import aquiles_etl_pipeline_spark` inside mapInPandas /
-    pandas_udf closures that reference package functions (cloudpickle
-    serializes those by module reference, not by value).  Shipping a
+
+def prepare_session(spark: SparkSession) -> None:
+    """Ready a session for the engine, once per session (session_key):
+    ours or foreign (the correctness driver's, a notebook's).
+
+    Sets the parquet read confs (``_PARQUET_READ_CONFS``), and ships the
+    package to the session's Python workers only when they cannot
+    import it from the source tree (:func:`_workers_import_package`)."""
+    key = session_key(spark)
+    if key in _PREPARED:
+        return
+    _PREPARED.add(key)
+    for k, v in _PARQUET_READ_CONFS.items():
+        spark.conf.set(k, v)
+    if not _workers_import_package(spark):
+        ship_package_to_workers(spark)
+
+
+def _workers_import_package(spark: SparkSession) -> bool:
+    """Whether the session's Python workers import this package without
+    a shipped copy.  Local-mode workers get the driver JVM's PYTHONPATH
+    (Spark's PythonWorkerFactory passes it on), which carries the
+    package's parent when get_spark launched the JVM.  A cluster's
+    workers run on other hosts, so there the answer is no."""
+    sc = spark.sparkContext
+    if not sc.master.startswith("local"):
+        return False
+    jvm_path = sc._jvm.System.getenv("PYTHONPATH") or ""
+    return _PKG_PARENT in jvm_path.split(os.pathsep)
+
+
+def ship_package_to_workers(spark: SparkSession) -> None:
+    """Make this package importable by the Python workers of a session
+    whose workers lack it (see prepare_session).
+
+    Package functions inside mapInPandas / pandas_udf closures reach
+    workers by module reference (cloudpickle pickles importable
+    functions by name), so workers of a session launched from any cwd
+    fail ``import aquiles_etl_pipeline_spark`` without it.  Shipping a
     zip of the package via ``addPyFile`` is the standard mid-session
-    fix: workers unpack it onto their sys.path.  Idempotent per
-    session via _WARMED_SESSIONS' caller; cheap (~100 KB zip, built
-    once per process)."""
+    fix: workers put it on their sys.path.  Cheap (~100 KB zip, built
+    once per process); a failure is logged, never raised."""
     import tempfile
     import zipfile
 
     global _PKG_ZIP
     try:
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
         if _PKG_ZIP is None:
             fd, zpath = tempfile.mkstemp(prefix="aquiles_pkg_", suffix=".zip")
             os.close(fd)
             with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
+                for root, _dirs, files in os.walk(os.path.dirname(os.path.abspath(__file__))):
                     for fn in files:
-                        if not fn.endswith(".py"):
-                            continue
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(
-                            "aquiles_etl_pipeline_spark",
-                            os.path.relpath(full, pkg_dir),
-                        )
-                        zf.write(full, rel)
+                        if fn.endswith(".py"):
+                            full = os.path.join(root, fn)
+                            zf.write(full, os.path.relpath(full, _PKG_PARENT))
             _PKG_ZIP = zpath
         spark.sparkContext.addPyFile(_PKG_ZIP)
     except Exception as exc:  # never let shipping break a real session
@@ -355,41 +381,3 @@ def ship_package_to_workers(spark: SparkSession) -> None:
 
 
 _PKG_ZIP: str | None = None
-
-
-def warm_python_workers(spark: SparkSession) -> None:
-    """Boot the Python worker daemon in the background.
-
-    Spark launches the worker daemon lazily on the FIRST Python stage,
-    and that launch serializes several seconds of interpreter + pandas/
-    pyarrow imports (measured 4.5 s) in the critical path of whichever
-    query happens to hit it.  Firing a one-row pandas-UDF job from a
-    daemon thread at session creation moves that boot off the critical
-    path — it overlaps parquet reads and planning the driver does
-    anyway.  Idempotent per session; safe to call with a foreign
-    session (the correctness driver's, a notebook's), which also gets
-    the parquet read confs :func:`get_spark` launches with, once."""
-    key = session_key(spark)
-    if key in _WARMED_SESSIONS:
-        return
-    _WARMED_SESSIONS.add(key)
-    for k, v in _PARQUET_READ_CONFS.items():
-        spark.conf.set(k, v)
-    ship_package_to_workers(spark)
-
-    def _boot() -> None:
-        try:
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
-
-            @pandas_udf("long")
-            def _noop(s: pd.Series) -> pd.Series:
-                return s
-
-            spark.range(1).select(_noop("id")).collect()
-        except Exception as exc:  # never let warm-up break a real session
-            _log.warning("Python worker warm-up failed: %s: %s", type(exc).__name__, exc)
-
-    import threading
-
-    threading.Thread(target=_boot, name="aquiles-worker-warmup", daemon=True).start()

@@ -31,12 +31,19 @@ def sf_dir_module() -> str:
     return "/root/testdata/sf0.001"
 
 
+# query name -> output schema of the frame test_query_matches_oracle
+# built, so the hash-hazard check does not build the query again
+_SCHEMAS: dict = {}
+
+
 @pytest.mark.parametrize("name", sorted(registry()))
 def test_query_matches_oracle(spark, oracle, sf_dir_module, name):
     spec = registry()[name]
     if spec.sql is None:
         pytest.skip("no oracle (rows-only check)")
-    got = canon(spec.fn(spark, sf_dir_module).toPandas())
+    df = spec.fn(spark, sf_dir_module)
+    _SCHEMAS[name] = df.schema
+    got = canon(df.toPandas())
     want = canon(oracle.execute(spec.sql).df())
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want), f"rowcount {len(got)} != {len(want)}"
@@ -44,7 +51,7 @@ def test_query_matches_oracle(spark, oracle, sf_dir_module, name):
 
 
 @pytest.mark.parametrize("name", sorted(registry()))
-def test_no_hash_hazard_output_types(spark, name):
+def test_no_hash_hazard_output_types(spark, sf_dir_module, name):
     """Driver-hash discipline (round-1 and round-2 lessons): oracle-
     backed queries must not emit DECIMAL, FLOAT32, or container-typed
     output columns.  The driver renders Spark decimals scale-preserving
@@ -54,7 +61,9 @@ def test_no_hash_hazard_output_types(spark, name):
     driver's pandas canonicalizer cannot hash ARRAY/MAP/STRUCT cells at
     all ('unhashable type: list' — q54, r02).  Fractional outputs must
     be DOUBLE (relational.catalog.emit); array outputs must be
-    serialized to scalars (array_join / hash digest)."""
+    serialized to scalars (array_join / hash digest).  Checks the
+    schema of the frame the oracle test built, building the query only
+    when that test has not run."""
     from pyspark.sql.types import (
         ArrayType,
         DateType,
@@ -67,7 +76,7 @@ def test_no_hash_hazard_output_types(spark, name):
     spec = registry()[name]
     if spec.sql is None:
         pytest.skip("no oracle (rows-only check)")
-    schema = spec.fn(spark, "/root/testdata/sf0.001").schema
+    schema = _SCHEMAS.get(name) or spec.fn(spark, sf_dir_module).schema
     # DateType: pandas renders Spark dates as datetime.date but DuckDB
     # dates as datetime64 -> guaranteed mirror mismatch (q83 lesson);
     # emit ISO strings instead.  TIMESTAMP is fine (datetime64 both).
