@@ -46,9 +46,16 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
+    # The package's 32g heap default is more than a 16 GB box has: G1
+    # grows the heap toward it, and on a loaded box the OOM killer took
+    # the JVM part-way through a run.  The suite reads sf0.001 tables;
+    # under 6g a full run peaks at 5–6 GB JVM RSS (4 cores, 16 GB).
     spark = get_spark(
         app_name="aquiles-tests",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
+        extra_conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "6g"),
+        },
     )
     yield spark
 
