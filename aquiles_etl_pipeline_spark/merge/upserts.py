@@ -21,9 +21,12 @@ staging projections (staging.split.StagedBatch, lazy over the ingest
 chain's cached frame) and are idempotent per batch: re-running the
 same batch converges to the same table state — that is this engine's
 substitute for the reference's single cross-table SQL transaction
-(etl:171), which Delta/parquet cannot express.  The reference's S11
-staging cleanup has nothing to delete: staging tables are written only
-for a batch whose merge failed (sources.orchestrator.run_pipeline).
+(etl:171).  ``Warehouse.transaction`` can commit several tables
+atomically, and every write kind has a stage-only half it could use,
+but the chain does not commit through it yet: each merge flips its own
+table (ROADMAP direction 3).  The reference's S11 staging cleanup has
+nothing to delete: staging tables are written only for a batch whose
+merge failed (sources.orchestrator.run_pipeline).
 
 Stats: M1 and U1 count their new rows before writing (the count gates
 the write).  M2 and M3 report ``inserted`` and ``total_source`` through
@@ -39,7 +42,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -90,60 +93,55 @@ def _observed(merged: DataFrame) -> tuple[DataFrame, Callable[[], dict[str, int]
     return observed.drop("_op"), counts
 
 
-def merge_providers(wh: Warehouse, staging: DataFrame) -> int:
-    """M1: insert staging provider names that match no provider and no
-    synonym.  Returns the number inserted; the table is rewritten only
-    when that is non-zero."""
-    staging = staging.select("Name").distinct()
-    provider = wh.read("provider")
-    synonyms = wh.read("provider_synonym")
-
-    new_names = (
-        staging.join(F.broadcast(provider.select("Name")), "Name", "left_anti")
-        .join(
-            F.broadcast(synonyms.select(F.col("Synonym").alias("Name"))),
-            "Name",
-            "left_anti",
-        )
-    )
-    new_rows = _next_ids(provider, new_names, "Name").select(
-        "Id", "Name", F.current_timestamp().alias("CreateDt")
-    )
+def _insert_if_absent(
+    wh: Warehouse, table: str, alias_table: str, keys: DataFrame, alias_key: str,
+    norm: Callable[[Column], Column], columns: list,
+) -> int:
+    """M1 and U1's one body: insert the distinct staged ``keys`` (one
+    column, named like the table's key) that match, through ``norm``, no
+    key of ``table`` and no ``alias_key`` of ``alias_table``, with Ids
+    above the table's max.  Returns the count; only non-zero writes."""
+    key = keys.columns[0]
+    target = wh.read(table)
+    unseen = keys
+    for known, col in ((target, key), (wh.read(alias_table), alias_key)):
+        known = F.broadcast(known.select(norm(F.col(col)).alias(key)))
+        unseen = unseen.join(known, key, "left_anti")
     # batch-sized: persist so the count gate and the write share one
     # materialization instead of re-running the anti-join chain
-    new_rows = new_rows.persist()
+    new_rows = _next_ids(target, unseen, key).select(*columns).persist()
     n = new_rows.count()
     if n:
-        wh.overwrite("provider", provider.unionByName(new_rows))
+        wh.overwrite(table, target.unionByName(new_rows))
     new_rows.unpersist()
     return n
+
+
+def merge_providers(wh: Warehouse, staging: DataFrame) -> int:
+    """M1: insert staging provider names that match no provider Name
+    and no synonym, exactly.  Returns the number inserted."""
+    return _insert_if_absent(
+        wh, "provider", "provider_synonym",
+        staging.select("Name").distinct(), "Synonym", lambda c: c,
+        ["Id", "Name", F.current_timestamp().alias("CreateDt")],
+    )
 
 
 def ensure_units_of_measure(wh: Warehouse, staging: DataFrame) -> int:
     """U1 (docs/ETL_ENHANCEMENTS.md:23): create unseen units before the
-    product merge; acronym aliases (UnitOfMeasureAcronym) resolve to
-    existing units and are not duplicated.  Count-gated like
-    :func:`merge_providers`."""
-    staging = (
+    product merge.  Acronyms compare lower-cased, and acronym aliases
+    (UnitOfMeasureAcronym) resolve to existing units and are not
+    duplicated.  Returns the number inserted."""
+    acronyms = (
         staging.select(F.lower(F.col("UnitOfMeasure")).alias("Acronym"))
         .where(F.col("Acronym").isNotNull())
         .distinct()
     )
-    uom = wh.read("unit_of_measure")
-    alias = wh.read("unit_of_measure_acronym")
-    unseen = (
-        staging.join(F.broadcast(uom.select(F.lower("Acronym").alias("Acronym"))), "Acronym", "left_anti")
-        .join(F.broadcast(alias.select(F.lower("Acronym").alias("Acronym"))), "Acronym", "left_anti")
+    return _insert_if_absent(
+        wh, "unit_of_measure", "unit_of_measure_acronym",
+        acronyms, "Acronym", F.lower,
+        ["Id", "Acronym", F.col("Acronym").alias("Name")],
     )
-    new_rows = _next_ids(uom, unseen, "Acronym").select(
-        "Id", "Acronym", F.col("Acronym").alias("Name")
-    )
-    new_rows = new_rows.persist()
-    n = new_rows.count()
-    if n:
-        wh.overwrite("unit_of_measure", uom.unionByName(new_rows))
-    new_rows.unpersist()
-    return n
 
 
 def _resolve_uom(wh: Warehouse, df: DataFrame, unit_col: str) -> DataFrame:

@@ -12,10 +12,28 @@ Delta/Iceberg tables (ACID MERGE INTO, time travel) without touching
 the merge-job logic, which is pure DataFrame code.  Parquet snapshots
 keep the container dependency-free (no delta-spark available here).
 
+Layout on disk::
+
+    <root>/_ROOT_SNAPSHOT.json   every table's current generation (snapshot())
+    <root>/_TXN.json             a committed transaction, until its flips end
+    <root>/<table>/_CURRENT      name of the current generation, g<N>
+    <root>/<table>/_TABLE_EPOCH  id of this incarnation of the table
+    <root>/<table>/g<N>/         one immutable generation:
+        part-*.parquet           data files, under <col>=<value>/ when
+                                 partitioned; written by this generation
+                                 or hardlinked from the one before
+        _GEN.json                the generation's record: schema,
+                                 partition columns, empty flag and the
+                                 writer's meta
+
+Every write kind builds its generation in :meth:`_stage`, then moves
+``_CURRENT`` with :meth:`_flip`.  The record is written last; reads
+refuse a generation without one and never infer a schema from footers.
+
 Scale posture: fact-table rewrite is the local-mode stand-in for Delta
 MERGE's file-level rewrite; staging tables are written (partitioned by
-BatchGuid) only for a batch whose merge failed.  Empty snapshots are a
-schema marker file, not a Spark write job — bootstrapping a warehouse
+BatchGuid) only for a batch whose merge failed.  An empty generation is
+its record alone, not a Spark write job — bootstrapping a warehouse
 launches zero jobs, and reading an empty table yields a local relation
 (which Catalyst folds into trivially-broadcast join sides).  Small
 control tables (lookups, the ProcessFile ledger) are read and written
@@ -28,13 +46,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
+import uuid
+from collections import Counter
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-_EMPTY_MARKER = "_EMPTY_SCHEMA.json"
+_RECORD = "_GEN.json"
 
 
 class Warehouse:
@@ -48,8 +70,6 @@ class Warehouse:
         the cost of retained hardlink trees (files shared across
         generations are linked, not copied, so retention costs only
         the *delta* files plus directory entries)."""
-        import threading
-
         self.spark = spark
         self.root = Path(root)
         self.keep_generations = max(2, keep_generations)
@@ -80,25 +100,27 @@ class Warehouse:
         ``keep_generations`` and ``history()``).  The Delta/Iceberg
         `VERSION AS OF` analog: every write makes a new immutable
         generation, so an old version is just a different directory."""
-        if version is not None:
-            cur = self._table_dir(name) / f"g{version}"
-            if not cur.exists():
-                have = [g["version"] for g in self.history(name)]
-                raise FileNotFoundError(
-                    f"table {name} has no retained generation g{version}"
-                    f" (retained: {have}; raise keep_generations to retain more)"
-                )
-        else:
-            cur = self._current(name)
+        cur = self._current(name) if version is None else self._retained(name, version)
         if cur is None:
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
         return self._read_gen(cur)
 
+    def _retained(self, name: str, version: int) -> Path:
+        gen = self._table_dir(name) / f"g{version}"
+        if not gen.exists():
+            have = [g["version"] for g in self.history(name)]
+            raise FileNotFoundError(
+                f"table {name} has no retained generation g{version}"
+                f" (retained: {have}; raise keep_generations to retain more)"
+            )
+        return gen
+
     def _read_gen(self, cur: Path) -> DataFrame:
         """Read one resolved generation directory (shared by pointer
         reads, version reads, and snapshot reads)."""
-        marker = cur / _EMPTY_MARKER
-        if marker.exists():
+        rec = self._record(cur)
+        schema = rec["schema"]
+        if rec["empty"]:
             # Surface emptiness to Catalyst: range(1)+Filter(false) folds
             # to LocalRelation <empty> (PruneFilters), and then
             # PropagateEmptyRelation ELIMINATES every join against this
@@ -107,19 +129,30 @@ class Warehouse:
             # through, so first-batch merges into a bootstrapped
             # warehouse paid broadcast-build + codegen for joins whose
             # result was statically empty.
-            schema = StructType.fromJson(json.loads(marker.read_text()))
             return (
                 self.spark.range(1)
                 .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
                 .where(F.lit(False))
             )
-        stored = self._stored_schema(cur)
-        if stored is not None:
-            # schema captured at write time: skips the footer-inference
-            # job every read would otherwise launch — merge batches do
-            # 3-4 reads each, and those jobs dominated the merge profile
-            return self.spark.read.schema(stored).parquet(str(cur))
-        return self.spark.read.parquet(str(cur))
+        # the recorded schema skips the footer-inference job a plain
+        # read launches — merge batches do 3-4 reads each, and those
+        # jobs dominated the merge profile
+        return self.spark.read.schema(schema).parquet(str(cur))
+
+    def _record(self, gen: Path) -> dict:
+        """A generation's record (``_GEN.json``): ``schema`` (a
+        StructType), ``partition_by``, ``empty`` and the writer's
+        ``meta``.  A generation without one is refused, never read by
+        footer inference."""
+        try:
+            rec = json.loads((gen / _RECORD).read_text())
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"table {gen.parent.name} generation {gen.name} has no {_RECORD}"
+                " record; refusing to infer its schema from parquet footers"
+            ) from None
+        rec["schema"] = StructType.fromJson(rec["schema"])
+        return rec
 
     def _new_gen(self, name: str) -> tuple[Path, list[int]]:
         tdir = self._table_dir(name)
@@ -134,8 +167,6 @@ class Warehouse:
         drop+recreate, so a snapshot pinning (table, gN) alone would
         silently read the NEW table's gN; the manifest pins the epoch
         too and snapshot reads verify it."""
-        import uuid
-
         marker = self._table_dir(name) / "_TABLE_EPOCH"
         if not marker.exists():
             marker.write_text(uuid.uuid4().hex)
@@ -147,8 +178,6 @@ class Warehouse:
         _publish_root (different table, different thread) could read an
         empty/partial pointer mid-write and persist it into the root
         manifest."""
-        import threading
-
         ptr = self._table_dir(name) / "_CURRENT"
         tmp = self._table_dir(name) / (
             f"_CURRENT.tmp.{os.getpid()}.{threading.get_ident()}"
@@ -237,8 +266,6 @@ class Warehouse:
                 except (ValueError, json.JSONDecodeError):
                     prev = 0
             version = prev + 1
-            import threading
-
             tmp = self.root / (
                 f"_ROOT_SNAPSHOT.json.tmp.{os.getpid()}.{threading.get_ident()}"
             )
@@ -275,23 +302,18 @@ class Warehouse:
                 tables[tdir.name] = ptr.read_text().strip()
         return WarehouseSnapshot(self, 0, tables)
 
-    def _write_empty(self, name: str, schema: StructType) -> None:
-        gen, old = self._new_gen(name)
-        gen.mkdir(parents=True, exist_ok=True)
-        (gen / _EMPTY_MARKER).write_text(json.dumps(schema.jsonValue()))
-        self._flip(name, gen, old)
-
     def create_if_absent(self, name: str, schema: StructType) -> None:
         if not self.exists(name):
-            self._write_empty(name, schema)
+            gen, old = self._stage(name, None, schema=schema)
+            self._flip(name, gen, old)
 
     def is_empty(self, name: str) -> bool:
         """Driver-side emptiness probe (no Spark job): the table is
-        absent or its current generation is the empty-schema marker.
+        absent or its current generation's record says it holds no row.
         Lets merges skip their touched-partition pre-flight on the
         bootstrap batch, where there is nothing to scope or carry."""
-        cur = self._current(name) if self.exists(name) else None
-        return cur is None or (cur / _EMPTY_MARKER).exists()
+        cur = self._current(name)
+        return cur is None or self._record(cur)["empty"]
 
     def seed_rows(self, name: str, schema: StructType, rows: list[tuple]) -> None:
         """Seed a tiny lookup table with a driver-side write
@@ -314,7 +336,7 @@ class Warehouse:
         """Read the current snapshot of a small unpartitioned table into
         the driver as a pyarrow table — no Spark job.  ``filter`` is a
         ``pyarrow.compute`` expression applied while reading.  Columns
-        are cast to the table's stored Spark schema, so a generation
+        are cast to the table's recorded Spark schema, so a generation
         Spark wrote (INT96 timestamps) reads back as the same UTC
         instants a pyarrow-written one holds."""
         import pyarrow.dataset as ds
@@ -323,36 +345,23 @@ class Warehouse:
         cur = self._current(name)
         if cur is None:
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        marker = cur / _EMPTY_MARKER
-        if marker.exists():
-            schema = StructType.fromJson(json.loads(marker.read_text()))
-            return to_arrow_schema(schema).empty_table()
+        rec = self._record(cur)
+        schema = to_arrow_schema(rec["schema"])
+        if rec["empty"]:
+            return schema.empty_table()
         fmt = ds.ParquetFileFormat(
             read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
         )
         files = sorted(str(f) for f in cur.glob("part-*"))
         table = ds.dataset(files, format=fmt).to_table(filter=filter)
-        stored = self._stored_schema(cur)
-        if stored is None:
-            return table
-        return table.select(stored.names).cast(to_arrow_schema(stored))
+        return table.select(schema.names).cast(schema)
 
     def overwrite_local(self, name: str, table: "pa.Table") -> None:
         """Driver-side counterpart of :meth:`overwrite` for small
         unpartitioned tables (lookups, the ProcessFile ledger): one
-        parquet file per generation plus its stored schema, then the
-        pointer flip.  No Spark job; Spark reads the result like any
-        other generation."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        gen, old = self._new_gen(name)
-        gen.mkdir(parents=True, exist_ok=True)
-        # no dictionary pages: control-table keys are near-unique, so
-        # dictionary encoding only costs time and bytes (half the write
-        # time of a 100k-row ledger)
-        pq.write_table(table, gen / "part-00000-local.parquet", use_dictionary=False)
-        self._write_partition_spec(gen, None, from_arrow_schema(table.schema))
+        parquet file per generation, then the pointer flip.  No Spark
+        job; Spark reads the result like any other generation."""
+        gen, old = self._stage(name, table)
         self._flip(name, gen, old)
 
     def overwrite(
@@ -376,30 +385,64 @@ class Warehouse:
     def _stage(
         self,
         name: str,
-        df: DataFrame,
+        df: "DataFrame | pa.Table | Callable[[Path], None] | None",
         partition_by: list[str] | None = None,
         meta: dict | None = None,
+        *,
+        schema: StructType | None = None,
+        carry: Callable[[Path], bool] | None = None,
     ) -> tuple[Path, list[int]]:
         """Write a fully-formed new generation WITHOUT flipping the
-        pointer — the staging half of overwrite(), shared with
-        :meth:`transaction` so multi-table commits stage everything
-        before any table becomes visible."""
+        pointer: the staging half of every write.  ``df`` holds the new
+        rows: a Spark frame, a pyarrow table (written on the driver), a
+        function writing data files into the generation directory, or
+        None; the last two take ``schema``.  ``carry(rel_path)`` picks
+        the current generation's data files to hardlink forward (names
+        are UUID-unique, so partition directories merge cleanly).  A
+        generation holding no row is demoted to its record alone, which
+        is written last."""
+        import pyarrow.parquet as pq
+
         gen, old = self._new_gen(name)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(gen))
-        # a partitioned write of an empty frame produces no footer at
-        # all → unreadable snapshot; demote it to an empty-schema marker
-        # (checked on the filesystem, not with a Spark job)
-        if not any(gen.rglob("part-*")):
-            shutil.rmtree(gen, ignore_errors=True)
-            gen.mkdir(parents=True, exist_ok=True)
-            (gen / _EMPTY_MARKER).write_text(json.dumps(df.schema.jsonValue()))
+        if isinstance(df, DataFrame):
+            schema = df.schema
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(str(gen))
         else:
-            self._write_partition_spec(gen, partition_by, df.schema)
-        if meta is not None:
-            (gen / "_WRITE_META.json").write_text(json.dumps(meta))
+            gen.mkdir()
+            if callable(df):
+                df(gen)
+            elif df is not None:
+                from pyspark.sql.pandas.types import from_arrow_schema
+
+                schema = from_arrow_schema(df.schema)
+                # no dictionary pages: control-table keys are near-unique,
+                # so dictionary encoding only costs time and bytes (half
+                # the write time of a 100k-row ledger)
+                pq.write_table(df, gen / "part-00000-local.parquet", use_dictionary=False)
+        cur = self._current(name)
+        if carry is not None and cur is not None:
+            for f in cur.rglob("part-*"):
+                rel = f.relative_to(cur)
+                if carry(rel):
+                    (gen / rel).parent.mkdir(parents=True, exist_ok=True)
+                    os.link(f, gen / rel)
+        # rows counted from parquet footers, not with a Spark job: an
+        # empty frame leaves no data file when partitioned and one
+        # footer-only file when not
+        empty = not any(pq.read_metadata(f).num_rows for f in gen.rglob("part-*"))
+        if empty:
+            shutil.rmtree(gen)
+            gen.mkdir()
+        record = {
+            "schema": schema.jsonValue(),
+            "partition_by": list(partition_by or []),
+            "empty": empty,
+            "meta": meta,
+        }
+        (gen / _RECORD).write_text(json.dumps(record, separators=(",", ":")))
         return gen, old
 
     # -- atomic multi-table transactions ---------------------------------
@@ -435,8 +478,6 @@ class Warehouse:
         through moves once, after every flip (step 3.5), so snapshot
         readers see the transaction all-old or all-new.
         """
-        import os
-
         staged: dict[str, tuple[str, list[int]]] = {}
         for name, spec in writes.items():
             df, partition_by = spec if isinstance(spec, tuple) else (spec, None)
@@ -447,9 +488,9 @@ class Warehouse:
         # manifest CONTENTS before the rename and the root DIRECTORY
         # after it, so the commit point cannot reach disk ahead of the
         # bytes it points at on an OS crash / power loss.  (Staged
-        # parquet data is Spark-written; its durability is the
-        # filesystem's ordinary write-back — the manifest fsync ensures
-        # we never replay a manifest whose own contents were lost.)
+        # parquet data's durability is the filesystem's ordinary
+        # write-back — the manifest fsync ensures we never replay a
+        # manifest whose own contents were lost.)
         # buffered write + flush guards against short os.write returns
         # (a truncated manifest fsynced past the rename would become a
         # corrupt commit record)
@@ -509,86 +550,43 @@ class Warehouse:
         """Metadata recorded with the current generation's write (see
         ``overwrite(meta=)``), or None."""
         cur = self._current(name)
+        return None if cur is None else self._record(cur)["meta"]
+
+    def _can_carry(self, name: str, df: DataFrame, partition_by: list[str]) -> bool:
+        """Whether the current generation's files may be hardlinked under
+        ``df``'s schema and ``partition_by``: the table is absent or
+        empty, or matches by column names AND types and by partition
+        columns.  A record holds one schema for all its files, so files
+        carried under another type would be silently cast or nulled."""
+        cur = self._current(name)
         if cur is None:
-            return None
-        meta = cur / "_WRITE_META.json"
-        return json.loads(meta.read_text()) if meta.exists() else None
-
-    def _link_files(self, src: Path, dest: Path, only_top: str | None = None) -> bool:
-        """Hardlink src's data files into dest, preserving partition
-        paths.  ``only_top`` restricts to one top-level partition dir.
-        Returns True if any file was linked."""
-        linked = False
-        for f in src.rglob("part-*"):
-            rel = f.relative_to(src)
-            if only_top is not None and rel.parts[0] != only_top:
-                continue
-            target = dest / rel
-            target.parent.mkdir(parents=True, exist_ok=True)
-            os.link(f, target)
-            linked = True
-        return linked
-
-    def _partition_spec(self, gen: Path) -> list[str]:
-        meta = gen / "_PARTITION_SPEC.json"
-        return json.loads(meta.read_text()) if meta.exists() else []
-
-    def _write_partition_spec(
-        self, gen: Path, partition_by: list[str] | None, schema: StructType | None = None
-    ) -> None:
-        (gen / "_PARTITION_SPEC.json").write_text(json.dumps(partition_by or []))
-        if schema is not None:
-            (gen / "_TABLE_SCHEMA.json").write_text(json.dumps(schema.jsonValue()))
-
-    def _stored_schema(self, gen: Path) -> StructType | None:
-        meta = gen / "_TABLE_SCHEMA.json"
-        if not meta.exists():
-            return None
-        return StructType.fromJson(json.loads(meta.read_text()))
+            return True
+        rec = self._record(cur)
+        have = {f.name: f.dataType for f in rec["schema"].fields}
+        want = {f.name: f.dataType for f in df.schema.fields}
+        return rec["empty"] or (have == want and rec["partition_by"] == partition_by)
 
     def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """True file-level append: write ONLY the new rows as parquet,
-        hardlink the previous generation's data files into the new one
-        (file names are UUID-unique, so partition dirs merge cleanly).
+        hardlink the previous generation's data files into the new one.
 
         This is the local stand-in for a Delta transaction-log append:
         cost is O(new data), never O(table history) — the difference
         between a staging table that scales and one that rewrites its
-        whole past on every batch.  Falls back to union+rewrite if the
-        incoming schema (names AND types) or partition layout diverges
-        from the snapshot's — hardlinking mixed-type or mixed-layout
-        files into one generation would corrupt the snapshot."""
-        cur = self._current(name) if self.exists(name) else None
-        cur_empty = cur is None or (cur / _EMPTY_MARKER).exists()
-        if not cur_empty:
-            # stored (or footer-derived) schema, driver-side; data
-            # columns must match by name AND type, and the directory
-            # layout by partition spec, for a file-level merge to be sound
-            cur_schema = self._stored_schema(cur) or self.spark.read.parquet(str(cur)).schema
-            cur_fields = {f.name: f.dataType for f in cur_schema.fields}
-            new_fields = {f.name: f.dataType for f in df.schema.fields}
-            if cur_fields != new_fields or self._partition_spec(cur) != list(partition_by or []):
-                # df on the left: the rewrite then runs in df's session,
-                # where Observations on df (staging's row counts) report
-                self.overwrite(
-                    name,
-                    df.unionByName(self.read(name), allowMissingColumns=True),
-                    partition_by=partition_by,
-                )
-                return
-        gen, old = self._new_gen(name)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(gen))
-        wrote_new = any(gen.rglob("part-*"))
-        linked = False if cur_empty else self._link_files(cur, gen)
-        if not wrote_new and not linked:
-            shutil.rmtree(gen, ignore_errors=True)
-            gen.mkdir(parents=True, exist_ok=True)
-            (gen / _EMPTY_MARKER).write_text(json.dumps(df.schema.jsonValue()))
-        else:
-            self._write_partition_spec(gen, partition_by, df.schema)
+        whole past on every batch.  Falls back to union+rewrite when
+        :meth:`_can_carry` refuses (schema or layout diverges) —
+        hardlinking mixed-type or mixed-layout files into one generation
+        would corrupt the snapshot."""
+        if not self._can_carry(name, df, list(partition_by or [])):
+            # df on the left: the rewrite then runs in df's session,
+            # where Observations on df (staging's row counts) report
+            self.overwrite(
+                name,
+                df.unionByName(self.read(name), allowMissingColumns=True),
+                partition_by=partition_by,
+            )
+            return
+        gen, old = self._stage(name, df, partition_by, carry=lambda rel: True)
         self._flip(name, gen, old)
 
     def replace_partitions(
@@ -601,41 +599,21 @@ class Warehouse:
         O(touched partitions), not O(table) — the difference between a
         fact-table merge that scales and one that rewrites its whole
         history every batch.  No Spark job touches the untouched
-        partitions; their files move by hardlink only."""
-        cur = self._current(name) if self.exists(name) else None
-        cur_empty = cur is None or (cur / _EMPTY_MARKER).exists()
-        if not cur_empty:
-            # same name+type guard append() applies: _TABLE_SCHEMA.json
-            # records only the newest write's schema while older
-            # partitions' files ride along by hardlink, so a
-            # type-evolving write would make later schema-forced reads
-            # silently cast or null-out the carried-forward files.
-            # Layout or schema divergence -> full rewrite through
-            # unionByName, which surfaces incompatibilities loudly.
-            cur_schema = self._stored_schema(cur) or self.spark.read.parquet(str(cur)).schema
-            cur_fields = {f.name: f.dataType for f in cur_schema.fields}
-            new_fields = {f.name: f.dataType for f in df.schema.fields}
-            if cur_fields != new_fields or self._partition_spec(cur) != [partition_col]:
-                untouched = self.read(name).where(~F.col(partition_col).isin(values))
-                self.overwrite(
-                    name, df.unionByName(untouched), partition_by=[partition_col]
-                )
-                return
-        gen, old = self._new_gen(name)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(str(gen))
-        wrote_new = any(gen.rglob("part-*"))
-        linked = False
-        if not cur_empty:
-            skip = {f"{partition_col}={v}" for v in values}
-            for child in cur.iterdir():
-                if child.is_dir() and child.name.startswith(f"{partition_col}=") and child.name not in skip:
-                    linked = self._link_files(cur, gen, only_top=child.name) or linked
-        if not wrote_new and not linked:
-            shutil.rmtree(gen, ignore_errors=True)
-            gen.mkdir(parents=True, exist_ok=True)
-            (gen / _EMPTY_MARKER).write_text(json.dumps(df.schema.jsonValue()))
-        else:
-            self._write_partition_spec(gen, [partition_col], df.schema)
+        partitions; their files move by hardlink only.  Schema or layout
+        divergence (:meth:`_can_carry`) falls back to a full rewrite
+        through unionByName, which surfaces incompatibilities loudly."""
+        if not self._can_carry(name, df, [partition_col]):
+            untouched = self.read(name).where(~F.col(partition_col).isin(values))
+            self.overwrite(name, df.unionByName(untouched), partition_by=[partition_col])
+            return
+        prefix = f"{partition_col}="
+        skip = {f"{prefix}{v}" for v in values}
+        gen, old = self._stage(
+            name,
+            df,
+            [partition_col],
+            carry=lambda rel: rel.parts[0].startswith(prefix) and rel.parts[0] not in skip,
+        )
         self._flip(name, gen, old)
 
     def compact(
@@ -653,7 +631,7 @@ class Warehouse:
         grow with file count, not data size — the lakehouse housekeeping
         Delta's OPTIMIZE / Iceberg's rewrite_data_files owns on a real
         cluster.  Cost is O(compacted partitions); returns
-        {partition_path_or_'': files_before} for the rewritten ones.
+        {partition_path_or_'.': files_before} for the rewritten ones.
 
         ``sort_by`` additionally CLUSTERS the rewrite (Delta's
         ``OPTIMIZE ... ZORDER BY``'s single-column analog): rows are
@@ -665,66 +643,45 @@ class Warehouse:
         readers.
         """
         cur = self._current(name)
-        if cur is None or (cur / _EMPTY_MARKER).exists():
+        if cur is None:
             return {}
-        spec = self._partition_spec(cur)
-        schema = self._stored_schema(cur)
-
-        # group data files by their (possibly nested) partition dir
-        groups: dict[Path, list[Path]] = {}
-        for f in cur.rglob("part-*"):
-            groups.setdefault(f.parent, []).append(f)
-        todo = {d: fs for d, fs in groups.items() if len(fs) > max_files}
+        rec = self._record(cur)
+        # data files per (possibly nested) partition dir, relative to cur
+        groups = Counter(f.parent.relative_to(cur) for f in cur.rglob("part-*"))
+        todo = {d: n for d, n in groups.items() if n > max_files}
         if not todo:
             return {}
+        # partition columns live in dir names, not in the files
+        spec = rec["partition_by"]
+        data_schema = StructType([f for f in rec["schema"].fields if f.name not in spec])
 
-        if schema is not None and spec:
-            # partition columns live in dir names, not in the files
-            data_schema = StructType(
-                [f for f in schema.fields if f.name not in spec]
-            )
-        else:
-            data_schema = schema
+        def rewrite(gen: Path) -> None:
+            for rel in todo:
+                df = self.spark.read.schema(data_schema).parquet(str(cur / rel))
+                if sort_by:
+                    df = df.repartitionByRange(
+                        target_files, *[F.col(c) for c in sort_by]
+                    ).sortWithinPartitions(*sort_by)
+                else:
+                    df = df.coalesce(target_files)
+                df.write.mode("overwrite").parquet(str(gen / rel))
+                # drop the write's _SUCCESS noise to keep generations uniform
+                (gen / rel / "_SUCCESS").unlink(missing_ok=True)
 
-        gen, old = self._new_gen(name)
-        stats: dict[str, int] = {}
-        for d, fs in todo.items():
-            rel = d.relative_to(cur)
-            reader = self.spark.read
-            if data_schema is not None:
-                reader = reader.schema(data_schema)
-            df = reader.parquet(str(d))
-            out_dir = gen / rel
-            if sort_by:
-                df = df.repartitionByRange(
-                    target_files, *[F.col(c) for c in sort_by]
-                ).sortWithinPartitions(*sort_by)
-            else:
-                df = df.coalesce(target_files)
-            df.write.mode("overwrite").parquet(str(out_dir))
-            # drop the write's _SUCCESS noise to keep generations uniform
-            marker = out_dir / "_SUCCESS"
-            if marker.exists():
-                marker.unlink()
-            stats[str(rel)] = len(fs)
-        # hardlink every file of partitions we did not rewrite
-        skip_dirs = set(todo)
-        for f in cur.rglob("part-*"):
-            if f.parent in skip_dirs:
-                continue
-            target = gen / f.relative_to(cur)
-            target.parent.mkdir(parents=True, exist_ok=True)
-            os.link(f, target)
-        self._write_partition_spec(gen, spec, schema)
+        gen, old = self._stage(
+            name, rewrite, spec, rec["meta"], schema=rec["schema"],
+            carry=lambda rel: rel.parent not in todo,
+        )
         self._flip(name, gen, old)
-        return stats
+        return {str(rel): n for rel, n in todo.items()}
 
     def history(self, name: str) -> list[dict]:
         """Snapshot log (Delta DESCRIBE HISTORY analog): one entry per
         retained generation, oldest first — version, currentness,
         emptiness, data-file count, total bytes (hardlinked files
         counted at full size per generation), partition spec.  Pure
-        driver-side filesystem walk; no Spark job."""
+        driver-side filesystem walk; no Spark job.  A directory without
+        a record is not listed."""
         tdir = self._table_dir(name)
         if not tdir.exists():
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
@@ -734,15 +691,19 @@ class Warehouse:
             (p for p in tdir.glob("g*") if p.name[1:].isdigit()),
             key=lambda p: int(p.name[1:]),
         ):
+            try:
+                rec = self._record(gen)
+            except FileNotFoundError:
+                continue  # a write that did not finish (vacuum() removes it)
             files = list(gen.rglob("part-*"))
             out.append(
                 {
                     "version": int(gen.name[1:]),
                     "is_current": gen == cur,
-                    "is_empty": (gen / _EMPTY_MARKER).exists(),
+                    "is_empty": rec["empty"],
                     "n_files": len(files),
                     "bytes": sum(f.stat().st_size for f in files),
-                    "partition_by": self._partition_spec(gen),
+                    "partition_by": rec["partition_by"],
                 }
             )
         return out
@@ -752,12 +713,7 @@ class Warehouse:
         RESTORE analog).  Metadata-only: no data moves; newer
         generations stay on disk until a later write's retention pass
         retires them."""
-        gen = self._table_dir(name) / f"g{version}"
-        if not gen.exists():
-            raise FileNotFoundError(
-                f"table {name} has no retained generation g{version}"
-            )
-        self._write_pointer(name, gen.name)
+        self._write_pointer(name, self._retained(name, version).name)
         self._publish_root()
 
     def vacuum(self, name: str) -> list[int]:

@@ -258,6 +258,19 @@ _PARQUET_READ_CONFS = {
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else half of physical memory, between 1g
+    and 32g.  In local mode the driver heap is the whole executor heap:
+    8g starved 32 cores (2x wall time in GC over a bench sweep), and more
+    than the box has gets the JVM OOM-killed."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        total = 8 << 30
+    default = f"{max(1024, min(32 << 10, total // 2 >> 20))}m"
+    return os.environ.get("SPARK_DRIVER_MEMORY") or default
+
+
 def get_spark(
     app_name: str = "aquiles-etl-pipeline-spark",
     master: str | None = None,
@@ -300,10 +313,7 @@ def get_spark(
         # path: let the ContextCleaner delete checkpoint files once their
         # RDD is collected, so long sessions don't accumulate them
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        # local mode: the driver heap IS the whole executor heap; 8g
-        # starves 32 cores' worth of caches + broadcast + shuffle and
-        # showed up as 2x wall-time GC degradation over a bench sweep
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in {**_PARQUET_READ_CONFS, **(extra_conf or {})}.items():
@@ -359,7 +369,9 @@ def ship_package_to_workers(spark: SparkSession) -> None:
     fail ``import aquiles_etl_pipeline_spark`` without it.  Shipping a
     zip of the package via ``addPyFile`` is the standard mid-session
     fix: workers put it on their sys.path.  Cheap (~100 KB zip, built
-    once per process); a failure is logged, never raised."""
+    once per process and deleted when it exits); a failure is logged,
+    never raised."""
+    import atexit
     import tempfile
     import zipfile
 
@@ -375,9 +387,24 @@ def ship_package_to_workers(spark: SparkSession) -> None:
                             full = os.path.join(root, fn)
                             zf.write(full, os.path.relpath(full, _PKG_PARENT))
             _PKG_ZIP = zpath
+            atexit.register(_remove_package_zip)
         spark.sparkContext.addPyFile(_PKG_ZIP)
     except Exception as exc:  # never let shipping break a real session
         _log.warning("package not shipped to Python workers: %s: %s", type(exc).__name__, exc)
 
 
 _PKG_ZIP: str | None = None
+
+
+def _remove_package_zip() -> None:
+    """At exit: stop the context whose workers fetch the shipped zip,
+    then delete the zip."""
+    global _PKG_ZIP
+    from pyspark import SparkContext
+
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        Path(_PKG_ZIP).unlink(missing_ok=True)
+        _PKG_ZIP = None

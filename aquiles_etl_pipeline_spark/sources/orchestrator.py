@@ -14,8 +14,11 @@ from __future__ import annotations
 
 import io
 import logging
+import re
 import uuid
 from dataclasses import dataclass, field
+from pathlib import Path
+from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -109,6 +112,31 @@ def run_pipeline(
     return batch_guid, n_rows, staging_counts, merge_stats
 
 
+def _ledgered(
+    wh: Warehouse, container: str, file_name: str, blob_size: int | None, mode: str,
+    load: Callable[[], DataFrame], done: Callable[[str, int], ProcessingResult],
+) -> ProcessingResult:
+    """Both file paths' ledger protocol (etl:303-350): skip a file already
+    processed, else mark it in progress, run the pipeline over ``load()``
+    and mark it succeeded with ``done(batch_guid, rows)``'s result, or
+    failed with the error as the result's message."""
+    if ledger.already_processed(wh, container, file_name):  # etl:303-308
+        return ProcessingResult(True, "already processed", skipped=True)
+    info = ledger.FileInfo(container, file_name, blob_size=blob_size)
+    ledger.mark_in_progress(wh, info)  # etl:310-312
+    try:
+        batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(wh, load(), mode)
+        if n_rows == 0:
+            raise ValueError("CSV file is empty")  # etl:316-317
+        result = done(batch_guid, n_rows)
+        result.staging_counts, result.merge_stats = staging_counts, merge_stats
+        ledger.mark_success(wh, info)  # etl:329-331
+        return result
+    except Exception as exc:  # noqa: BLE001 — etl:338-350
+        ledger.mark_failed(wh, info)
+        return ProcessingResult(False, f"{type(exc).__name__}: {exc}")
+
+
 def process_csv_file(
     spark: SparkSession,
     wh: Warehouse,
@@ -119,29 +147,20 @@ def process_csv_file(
     mode: str = "exact",
 ) -> ProcessingResult:
     """§3.1: the main CSV path, ledgered."""
-    if ledger.already_processed(wh, container, file_name):  # etl:303-308
-        return ProcessingResult(True, "already processed", skipped=True)
 
-    info = ledger.FileInfo(container, file_name, blob_size=len(csv_text) if csv_text else None)
-    ledger.mark_in_progress(wh, info)  # etl:310-312
-    try:
+    def load() -> DataFrame:
         if path is not None:
-            df = spark.read.option("header", True).csv(path)
-        elif csv_text is not None:
-            df = _csv_text_to_df(spark, csv_text)
-        else:
-            raise ValueError("either csv_text or path is required")
-        batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(wh, df, mode)
-        if n_rows == 0:
-            raise ValueError("CSV file is empty")  # etl:316-317
-        ledger.mark_success(wh, info)  # etl:329-331
-        return ProcessingResult(
-            True, f"processed {n_rows} rows", n_rows, batch_guid,
-            staging_counts=staging_counts, merge_stats=merge_stats,
-        )
-    except Exception as exc:  # noqa: BLE001 — etl:338-350
-        ledger.mark_failed(wh, info)
-        return ProcessingResult(False, f"{type(exc).__name__}: {exc}")
+            return spark.read.option("header", True).csv(path)
+        if csv_text is not None:
+            return _csv_text_to_df(spark, csv_text)
+        raise ValueError("either csv_text or path is required")
+
+    return _ledgered(
+        wh, container, file_name, len(csv_text) if csv_text else None, mode, load,
+        lambda batch_guid, n_rows: ProcessingResult(
+            True, f"processed {n_rows} rows", n_rows, batch_guid
+        ),
+    )
 
 
 def process_csv_text(
@@ -170,8 +189,6 @@ def process_csv_text(
     if not gate.is_valid:
         return ProcessingResult(False, gate.message)
     if land_dir is not None:
-        from pathlib import Path
-
         target_dir = Path(land_dir)
         target_dir.mkdir(parents=True, exist_ok=True)
         (target_dir / file_name).write_text(csv_text)
@@ -198,36 +215,27 @@ def process_invoice_image(
     here it lands under ``archive_dir`` (default
     ``<warehouse>/_invoice_archive/<container>/``), driver-side because
     the payload is one extracted text per image."""
-    if ledger.already_processed(wh, container, image_name):
-        return ProcessingResult(True, "already processed", skipped=True)
-    info = ledger.FileInfo(container, image_name, blob_size=len(image_bytes))
-    ledger.mark_in_progress(wh, info)
-    try:
+    csv_text = ""
+
+    def load() -> DataFrame:
+        nonlocal csv_text
         raw = extractor.extract(image_bytes, image_name)
         # F17 fence strip (etl:261-267) — driver-side here because the
         # extractor returns one text per image; the column-level variant
         # is functions.strip_markdown_fence.
-        import re
-
         m = re.search(r"```(?:csv)?\s*(.*?)```", raw.strip(), re.DOTALL | re.IGNORECASE)
         csv_text = m.group(1).strip() if m else raw.strip()
-        df = _csv_text_to_df(spark, csv_text)
-        batch_guid, n_rows, staging_counts, merge_stats = run_pipeline(wh, df, mode)
-        if n_rows == 0:
-            raise ValueError("CSV file is empty")  # etl:316-317
+        return _csv_text_to_df(spark, csv_text)
+
+    def done(batch_guid: str, n_rows: int) -> ProcessingResult:
         stem = image_name.rsplit(".", 1)[0]
         csv_filename = f"{stem}_{batch_guid[:8]}.csv"
-        from pathlib import Path
-
         adir = Path(archive_dir) if archive_dir else wh.root / "_invoice_archive" / container
         adir.mkdir(parents=True, exist_ok=True)
         (adir / csv_filename).write_text(csv_text)
-        ledger.mark_success(wh, info)
         return ProcessingResult(
             True, f"extracted {n_rows} products", n_rows, batch_guid,
             products_extracted=n_rows, csv_filename=csv_filename,
-            staging_counts=staging_counts, merge_stats=merge_stats,
         )
-    except Exception as exc:  # noqa: BLE001
-        ledger.mark_failed(wh, info)
-        return ProcessingResult(False, f"{type(exc).__name__}: {exc}")
+
+    return _ledgered(wh, container, image_name, len(image_bytes), mode, load, done)

@@ -46,10 +46,11 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    # The package's 32g heap default is more than a 16 GB box has: G1
-    # grows the heap toward it, and on a loaded box the OOM killer took
-    # the JVM part-way through a run.  The suite reads sf0.001 tables;
-    # under 6g a full run peaks at 5–6 GB JVM RSS (4 cores, 16 GB).
+    # The package's heap default is half of physical memory: G1 grows
+    # the heap toward it, and with the 32g it once was the OOM killer
+    # took the JVM part-way through a run on a loaded 16 GB box.  The
+    # suite reads sf0.001 tables; under 6g a full run peaks at 5–6 GB
+    # JVM RSS (4 cores, 16 GB).
     spark = get_spark(
         app_name="aquiles-tests",
         extra_conf={

@@ -239,7 +239,7 @@ def test_incremental_merge_rewrites_only_touched_buckets(spark, wh):
 def test_replace_partitions_guards_schema_drift(spark, wh):
     """ADVICE r02: replace_partitions must apply the same name+type
     schema guard append() does — a type-evolving write may not hardlink
-    older-generation files under a new _TABLE_SCHEMA.json (schema-forced
+    older-generation files under a new _GEN.json schema (schema-forced
     reads would silently cast/null them).  Divergence falls back to a
     full rewrite, keeping every row readable under ONE schema."""
     from pyspark.sql import types as T
@@ -256,7 +256,7 @@ def test_replace_partitions_guards_schema_drift(spark, wh):
     got = {(r["Bucket"], r["Val"]) for r in wh.read("t_guard").collect()}
     assert got == {(0, 10), (1, 2)}
     # type-evolving write (Val int -> bigint): must NOT hardlink old
-    # int32 files under a bigint _TABLE_SCHEMA.json (schema-forced reads
+    # int32 files under a bigint _GEN.json schema (schema-forced reads
     # of the old files would fail or silently cast) — full rewrite path,
     # every file written under the one widened schema
     df3 = spark.createDataFrame([(0, 100)], "Bucket: int, Val: bigint")
@@ -1242,3 +1242,107 @@ def test_observed_counts_recompute_when_the_metrics_never_arrive(spark, monkeypa
     assert frame.count() == 7
     assert _within(counts, seconds=120) == {"n": 7}
     assert len(recomputed) == 1
+
+
+WRITE_KINDS = (
+    "overwrite", "append", "replace_partitions",
+    "overwrite_local", "create_if_absent", "transaction",
+)
+
+
+def _write(spark, wh, kind: str, rows: list[tuple], partition_by: list[str] | None = None) -> None:
+    """One write of ``rows`` (k int, p string) into table ``t`` through
+    ``kind``; replace_partitions always partitions by ``p``, and
+    overwrite_local never does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL("k int, p string")
+    df = spark.createDataFrame(rows, schema)
+    if kind == "overwrite":
+        wh.overwrite("t", df, partition_by=partition_by)
+    elif kind == "append":
+        wh.append("t", df, partition_by=partition_by)
+    elif kind == "replace_partitions":
+        wh.replace_partitions("t", df, "p", sorted({p for _, p in rows}))
+    elif kind == "overwrite_local":
+        arrow = to_arrow_schema(schema)
+        table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
+        wh.overwrite_local("t", table)
+    elif kind == "create_if_absent":
+        wh.create_if_absent("t", schema)
+    else:
+        wh.transaction({"t": (df, partition_by)})
+
+
+@pytest.mark.parametrize("kind", WRITE_KINDS)
+def test_every_write_kind_leaves_one_record(spark, tmp_path, kind):
+    """Every write kind stages its generation through one function: the
+    generation holds data files (carried ones included) and one record,
+    _GEN.json, and no other metadata file."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    if kind in ("append", "replace_partitions"):
+        _write(spark, wh, "overwrite", [(1, "a"), (2, "b")], ["p"])
+    _write(spark, wh, kind, [(3, "a")], ["p"])
+    gen = wh._current("t")
+    metadata = sorted(
+        str(f.relative_to(gen))
+        for f in gen.rglob("*")
+        if f.is_file() and not f.name.startswith(("part-", ".", "_SUCCESS"))
+    )
+    assert metadata == ["_GEN.json"]
+    n = {"append": 3, "replace_partitions": 2, "create_if_absent": 0}.get(kind, 1)
+    assert wh.read("t").count() == n
+
+
+@pytest.mark.parametrize("kind", WRITE_KINDS)
+def test_empty_writes_read_back_empty_with_their_schema(spark, tmp_path, kind):
+    """A write of no row, through any kind (an empty Spark frame, an
+    empty pyarrow table), leaves an empty generation: is_empty is true,
+    and Spark and the driver read back no row under the written schema."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    _write(spark, wh, kind, [])
+    assert wh.is_empty("t")
+    assert wh.history("t")[-1]["is_empty"]
+    out = wh.read("t")
+    assert out.schema.simpleString() == "struct<k:int,p:string>"
+    assert out.count() == 0
+    local = wh.read_local("t")
+    assert local.num_rows == 0 and local.schema.names == ["k", "p"]
+
+
+def test_generation_without_record_is_refused(spark, tmp_path):
+    """A generation whose record is gone is refused, naming the table
+    and the generation; no read falls back to footer inference, so the
+    refusal launches no Spark job."""
+    from conftest import jobs_launched
+
+    wh = Warehouse(spark, tmp_path / "wh")
+    wh.overwrite("t", spark.createDataFrame([(1, "a")], "k int, p string"))
+    (wh._current("t") / "_GEN.json").unlink()
+    more = spark.createDataFrame([(2, "b")], "k int, p string")
+    probes = (
+        lambda: wh.read("t"),
+        lambda: wh.read("t", version=0),
+        lambda: wh.read_local("t"),
+        lambda: wh.is_empty("t"),
+        lambda: wh.append("t", more),
+        lambda: wh.replace_partitions("t", more, "p", ["b"]),
+    )
+    with jobs_launched(spark) as launched:
+        for probe in probes:
+            with pytest.raises(FileNotFoundError, match="table t generation g0 "):
+                probe()
+    assert launched.jobs == 0
+
+
+def test_history_skips_a_write_that_did_not_finish(spark, tmp_path):
+    """A generation directory without a record (a write that died
+    before its record) is not listed by history(), which keeps working
+    until vacuum() removes the debris."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    wh.overwrite("t", spark.createDataFrame([(1,)], "id int"))
+    (wh._table_dir("t") / "g7").mkdir()
+    assert [h["version"] for h in wh.history("t")] == [0]
+    assert wh.vacuum("t") == [7]

@@ -947,6 +947,53 @@ def test_prepare_session_ships_package_once_when_workers_lack_it(spark, monkeypa
     assert "aquiles_etl_pipeline_spark/session.py" in zipfile.ZipFile(shipped[0]).namelist()
 
 
+def test_shipped_package_zip_is_removed_at_exit(monkeypatch):
+    """The package zip a process ships is deleted by the exit handler
+    registered when the zip is built, after the context that serves it
+    to workers has stopped."""
+    import atexit
+    import os
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+
+    from aquiles_etl_pipeline_spark import session
+
+    shipped, at_exit, events = [], [], []
+    monkeypatch.setattr(session, "_PKG_ZIP", None)
+    monkeypatch.setattr(atexit, "register", at_exit.append)
+    session.ship_package_to_workers(
+        SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append))
+    )
+    [zpath] = shipped
+    assert os.path.exists(zpath) and at_exit == [session._remove_package_zip]
+    monkeypatch.setattr(
+        SparkContext, "_active_spark_context",
+        SimpleNamespace(stop=lambda: events.append(("stopped", os.path.exists(zpath)))),
+    )
+    at_exit[0]()
+    assert events == [("stopped", True)]
+    assert not os.path.exists(zpath) and session._PKG_ZIP is None
+
+
+@pytest.mark.parametrize(
+    "gib, heap", [(16, "8192m"), (128, "32768m"), (1, "1024m")]
+)
+def test_driver_memory_default_is_half_of_physical_memory(monkeypatch, gib, heap):
+    """get_spark's heap default is half of physical memory, between 1g
+    and 32g; SPARK_DRIVER_MEMORY overrides it."""
+    import os
+
+    from aquiles_etl_pipeline_spark import session
+
+    sysconf = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (gib << 30) // 4096}
+    monkeypatch.setattr(os, "sysconf", sysconf.__getitem__)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert session.driver_memory() == heap
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session.driver_memory() == "3g"
+
+
 @pytest.mark.slow
 def test_foreign_session_workers_import_the_package(tmp_path, sf_dir):
     """A plain ``SparkSession.builder`` session (the grading driver's
