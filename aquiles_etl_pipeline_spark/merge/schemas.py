@@ -45,7 +45,7 @@ PROVIDER = _s(
 N_BUCKETS = 16
 
 
-def bucket_of(*key_cols: str) -> Column:
+def bucket_of(*key_cols: str | Column) -> Column:
     """Stable bucket id from the merge key — the fact-table ``_bucket``
     column: pmod(xxhash64(keys), N_BUCKETS)."""
     return F.pmod(F.xxhash64(*key_cols), F.lit(N_BUCKETS)).cast("int")

@@ -16,22 +16,28 @@ identity index (core/entities.py:106,116) and docs/ETL_ENHANCEMENTS.md:
   M3 Provider_Product  — upsert keyed on (ProductId, ProviderId) after
                          resolving FKs from denormalized staging names
 
-All merges are pure DataFrame joins against the batch's in-memory
-staging projections (staging.split.StagedBatch, lazy over the ingest
-chain's cached frame) and are idempotent per batch: re-running the
-same batch converges to the same table state — that is this engine's
-substitute for the reference's single cross-table SQL transaction
-(etl:171).  ``Warehouse.transaction`` can commit several tables
-atomically, and every write kind has a stage-only half it could use,
-but the chain does not commit through it yet: each merge flips its own
-table (ROADMAP direction 3).  The reference's S11 staging cleanup has
+M1 and U1 are set lookups on the driver: the batch's provider names
+and units arrive with its staging projections (staging.split.StagedBatch,
+gathered by the ingest chain's one aggregate), and the small dimension
+tables they extend are read and written with pyarrow
+(``Warehouse.read_local``/``overwrite_local``), so neither launches a
+Spark job.  M2 and M3 are DataFrame joins against the batch's in-memory
+staging projections, lazy over the chain's cached frame.  Every merge
+is idempotent per batch: re-running the same batch converges to the
+same table state — that is this engine's substitute for the
+reference's single cross-table SQL transaction (etl:171).
+``Warehouse.transaction`` can commit several tables atomically, and
+every write kind has a stage-only half it could use, but the chain
+does not commit through it yet: each merge flips its own table
+(ROADMAP direction 3).  The reference's S11 staging cleanup has
 nothing to delete: staging tables are written only for a batch whose
 merge failed (sources.orchestrator.run_pipeline).
 
-Stats: M1 and U1 count their new rows before writing (the count gates
-the write).  M2 and M3 report ``inserted`` and ``total_source`` through
-an ``Observation`` on the frame their write job computes (merge.observed),
-so the counts cost no job of their own.
+Stats: M1 and U1 return the number of keys they inserted, counted on
+the driver; they write only when it is non-zero.  M2 and M3 report
+``inserted`` and ``total_source`` through an ``Observation`` on the
+frame their write job computes (merge.observed), so the counts cost no
+job of their own.
 
 Scale: staging batches are file-sized (small); every staging-vs-fact
 join broadcasts the staging side.  Fact rewrites become Delta MERGE
@@ -40,9 +46,13 @@ file-level rewrites on a real cluster (see warehouse.py seam).
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+from datetime import datetime, timezone
 from typing import TYPE_CHECKING, Callable
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -93,54 +103,67 @@ def _observed(merged: DataFrame) -> tuple[DataFrame, Callable[[], dict[str, int]
     return observed.drop("_op"), counts
 
 
+def _by_bucket(merged: DataFrame) -> DataFrame:
+    """Hash-partition a fact write by ``_bucket``, so each bucket it
+    rewrites is one file.  Left as it comes, every write task writes a
+    file into each bucket its rows reach: about 80 small files per fact
+    table per file ingested.  Measured together with M1/U1 on the
+    driver (``perfbench`` ``ingest_files``, 4 cores): files written per
+    ingested file 203 → 73 (traced, seed 1), ``op_p50_s`` 5.16 → 4.68 s
+    (median of 10 seed pairs); the extra shuffle costs less than the
+    small files it saves."""
+    return merged.repartition(8, "_bucket")
+
+
 def _insert_if_absent(
-    wh: Warehouse, table: str, alias_table: str, keys: DataFrame, alias_key: str,
-    norm: Callable[[Column], Column], columns: list,
+    wh: Warehouse, table: str, key: str, alias_table: str, alias_key: str,
+    keys: Iterable[str | None], norm: Callable[[str], str], row: Callable[[str], dict],
 ) -> int:
-    """M1 and U1's one body: insert the distinct staged ``keys`` (one
-    column, named like the table's key) that match, through ``norm``, no
-    key of ``table`` and no ``alias_key`` of ``alias_table``, with Ids
-    above the table's max.  Returns the count; only non-zero writes."""
-    key = keys.columns[0]
-    target = wh.read(table)
-    unseen = keys
-    for known, col in ((target, key), (wh.read(alias_table), alias_key)):
-        known = F.broadcast(known.select(norm(F.col(col)).alias(key)))
-        unseen = unseen.join(known, key, "left_anti")
-    # batch-sized: persist so the count gate and the write share one
-    # materialization instead of re-running the anti-join chain
-    new_rows = _next_ids(target, unseen, key).select(*columns).persist()
-    n = new_rows.count()
-    if n:
-        wh.overwrite(table, target.unionByName(new_rows))
-    new_rows.unpersist()
-    return n
+    """M1 and U1's one body, on the driver: insert the distinct ``keys``
+    that match, through ``norm``, no ``key`` of ``table`` and no
+    ``alias_key`` of ``alias_table``, as rows ``row(key)``.  Ids continue
+    above the table's max in key order, the order ``_next_ids`` gives:
+    Spark orders strings by their UTF-8 bytes, which is Python's
+    code-point order.  Returns the count; writes only when it is
+    non-zero.  Both tables are small lookups, read and written with
+    pyarrow, so no Spark job runs."""
+    target = wh.read_local(table)
+    known = {
+        norm(v)
+        for column in (target[key], wh.read_local(alias_table)[alias_key])
+        for v in column.to_pylist()
+        if v is not None
+    }
+    new = sorted({norm(k) for k in keys if k is not None} - known)
+    if new:
+        top = pc.max(target["Id"]).as_py() or 0
+        added = pa.Table.from_pylist(
+            [{"Id": top + n, **row(k)} for n, k in enumerate(new, start=1)],
+            schema=target.schema,
+        )
+        wh.overwrite_local(table, pa.concat_tables([target, added]))
+    return len(new)
 
 
-def merge_providers(wh: Warehouse, staging: DataFrame) -> int:
-    """M1: insert staging provider names that match no provider Name
-    and no synonym, exactly.  Returns the number inserted."""
+def merge_providers(wh: Warehouse, names: Iterable[str | None]) -> int:
+    """M1: insert the batch's provider ``names`` that match no provider
+    Name and no synonym, exactly.  Returns the number inserted."""
+    now = datetime.now(timezone.utc)
     return _insert_if_absent(
-        wh, "provider", "provider_synonym",
-        staging.select("Name").distinct(), "Synonym", lambda c: c,
-        ["Id", "Name", F.current_timestamp().alias("CreateDt")],
+        wh, "provider", "Name", "provider_synonym", "Synonym",
+        names, lambda k: k, lambda k: {"Name": k, "CreateDt": now},
     )
 
 
-def ensure_units_of_measure(wh: Warehouse, staging: DataFrame) -> int:
-    """U1 (docs/ETL_ENHANCEMENTS.md:23): create unseen units before the
-    product merge.  Acronyms compare lower-cased, and acronym aliases
-    (UnitOfMeasureAcronym) resolve to existing units and are not
-    duplicated.  Returns the number inserted."""
-    acronyms = (
-        staging.select(F.lower(F.col("UnitOfMeasure")).alias("Acronym"))
-        .where(F.col("Acronym").isNotNull())
-        .distinct()
-    )
+def ensure_units_of_measure(wh: Warehouse, units: Iterable[str | None]) -> int:
+    """U1 (docs/ETL_ENHANCEMENTS.md:23): create the batch's unseen
+    ``units`` before the product merge.  Acronyms compare lower-cased,
+    and acronym aliases (UnitOfMeasureAcronym) resolve to existing units
+    and are not duplicated; a new unit's Acronym and Name are its
+    lower-cased acronym.  Returns the number inserted."""
     return _insert_if_absent(
-        wh, "unit_of_measure", "unit_of_measure_acronym",
-        acronyms, "Acronym", F.lower,
-        ["Id", "Acronym", F.col("Acronym").alias("Name")],
+        wh, "unit_of_measure", "Acronym", "unit_of_measure_acronym", "Acronym",
+        units, str.lower, lambda k: {"Acronym": k, "Name": k},
     )
 
 
@@ -162,44 +185,6 @@ def _resolve_uom(wh: Warehouse, df: DataFrame, unit_col: str) -> DataFrame:
     )
 
 
-def prepare_product_source(
-    wh: Warehouse, staging: DataFrame
-) -> tuple[DataFrame, list[int]]:
-    """M2's staging-side prep, factored out so the chain can run it
-    CONCURRENTLY with M1/U1 (it reads only the staged products — no
-    dependency on providers or units): dedup the batch by
-    DescriptionHash, persist it, and collect the touched fact-table
-    buckets (the one driver round-trip the partition-scoped rewrite
-    needs before it can prune its read)."""
-    # one row per distinct description within the batch (T-SQL MERGE
-    # requires a unique source; keep the first by deterministic order)
-    w = Window.partitionBy("DescriptionHash").orderBy("Description", "Measure", "UnitOfMeasure")
-    src0 = (
-        staging.withColumn("DescriptionHash", scalar.description_hash(F.col("Description")))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
-    # bootstrap fast path: an EMPTY product table has no partitions to
-    # scope the read to or carry forward, so the touched-bucket driver
-    # round-trip buys nothing — skip the whole pre-flight job (src0's
-    # persist then materializes inside the write job instead; net one
-    # fewer job on the first batch, the shape q41 pays every run)
-    if wh.is_empty("product"):
-        return src0, []
-    # collect_set aggregation, not distinct().collect(): the partial
-    # aggregate dedupes map-side and the driver round-trip is one
-    # single-reduce job over #buckets values — no batch-wide distinct
-    # shuffle (this job also materializes src0's persist)
-    touched = sorted(
-        src0.agg(
-            F.collect_set(bucket_of("DescriptionHash")).alias("_bs")
-        ).first()["_bs"]
-    )
-    return src0, touched
-
-
 class _ProductMergePlan:
     """Lazy M2 merge result, split from its commit so the chain can
     overlap M2's write with M3 (which needs only the Id↔hash mapping
@@ -219,7 +204,7 @@ class _ProductMergePlan:
 
 
 def plan_product_merge(
-    wh: Warehouse, src0: DataFrame, touched: list[int]
+    wh: Warehouse, staging: DataFrame, touched: Sequence[int]
 ) -> _ProductMergePlan:
     """M2: upsert keyed on DescriptionHash = sha256(Description)
     (identity implied by the IX_Product_DescriptionHash index,
@@ -227,18 +212,30 @@ def plan_product_merge(
     UpdatedDt ('update existing ones with latest data',
     docs/ETL_ENHANCEMENTS.md:28); not matched → insert.
 
-    Builds the merged touched-bucket lineage from
-    :func:`prepare_product_source`'s output without writing.  Unit
-    resolution stays lazy (it must see U1's units), riding inside the
-    write job's broadcast joins instead of costing its own action."""
+    Builds the merged lineage of the ``touched`` buckets (the staged
+    descriptions' buckets, ``StagedBatch.product_buckets``) without
+    writing.  Unit resolution stays lazy (it must see U1's units),
+    riding inside the write job's broadcast joins instead of costing
+    its own action."""
+    # one row per distinct description within the batch (T-SQL MERGE
+    # requires a unique source; keep the first by deterministic order)
+    w = Window.partitionBy("DescriptionHash").orderBy("Description", "Measure", "UnitOfMeasure")
+    src0 = (
+        staging.withColumn("DescriptionHash", scalar.description_hash(F.col("Description")))
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
     # persist (lazily — the write job's first broadcast build fills the
     # cache) so the matched join, the insert anti-join, and the id
-    # assignment don't each re-run the two uom-resolution joins
+    # assignment don't each re-run the dedup and the two uom-resolution
+    # joins
     src = _resolve_uom(wh, src0, "UnitOfMeasure").persist()
 
     # partition-scoped merge: the batch's keys touch a subset of the
     # fact table's buckets; only those partitions are scanned (pruned
     # read) and rewritten — untouched partitions hardlink forward.
+    touched = list(touched)
     product = wh.read("product")
     base = product.where(F.col("_bucket").isin(touched))
     now = F.current_timestamp()
@@ -287,7 +284,7 @@ def plan_product_merge(
         F.lit(2).alias("_op"),
     )
     final = updated.unionByName(new_rows).persist()
-    return _ProductMergePlan(final, touched, (final, src, src0))
+    return _ProductMergePlan(final, touched, (final, src))
 
 
 def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, int]:
@@ -295,16 +292,7 @@ def commit_product_merge(wh: Warehouse, plan: _ProductMergePlan) -> dict[str, in
     hardlink forward).  The plan's caches stay alive for a concurrent
     M3 still reading ``plan.final``; the caller releases them."""
     final, counts = _observed(plan.final)
-    if not plan.touched:
-        # bootstrap batch (empty target): the insert side rides the
-        # single-partition id window, so the partitioned write would
-        # run as ONE task creating every bucket dir serially; a cheap
-        # post-id repartition by bucket writes them in parallel
-        # (measured ~0.3s/write at 20k rows).  Incremental batches
-        # keep their natural partitioning (the r05 measurement: a
-        # blanket repartition costs more than it saves there).
-        final = final.repartition(8, "_bucket")
-    wh.replace_partitions("product", final, "_bucket", plan.touched)
+    wh.replace_partitions("product", _by_bucket(final), "_bucket", plan.touched)
     return counts()
 
 
@@ -354,10 +342,12 @@ def merge_provider_products(
         .persist()  # batch-sized; shared by matched join + anti-join + write
     )
 
-    # same collect_set fold as prepare_product_source: one single-reduce
-    # job that doubles as src's persist materialization.  Bootstrap fast
-    # path (see prepare_product_source): an empty target needs no
-    # touched set — skip the pre-flight job.
+    # the touched set: collect_set, not distinct().collect(), so the
+    # partial aggregate dedupes map-side and the driver round-trip is
+    # one single-reduce job over #buckets values; it doubles as src's
+    # persist materialization.  An empty target (the bootstrap batch)
+    # has no partitions to scope the read to or carry forward, so it
+    # skips this pre-flight job.
     if wh.is_empty("provider_product"):
         touched: list[int] = []
     else:
@@ -398,33 +388,24 @@ def merge_provider_products(
         F.lit(2).alias("_op"),
     )
     merged, counts = _observed(updated.unionByName(new_rows))
-    if not touched:
-        # bootstrap fast path: parallelize the single-task partitioned
-        # write (see commit_product_merge)
-        merged = merged.repartition(8, "_bucket")
-    wh.replace_partitions("provider_product", merged, "_bucket", touched)
+    wh.replace_partitions("provider_product", _by_bucket(merged), "_bucket", touched)
     src.unpersist()
     return counts()
 
 
 def merge_staging_to_fact_tables(wh: Warehouse, staged: StagedBatch) -> dict[str, object]:
-    """etl:168-189 — the three merges, honoring the reference's
-    dependency order: M1 (providers) and U1 (units) touch disjoint
-    tables and staging projections, so they submit CONCURRENTLY — along
-    with M2's staging-side prep (dedup + touched-bucket collect), which
-    depends on neither; M2's unit resolution then rides lazily inside
-    its write job after U1 lands.  M3 (provider_products) needs M1's
-    providers and M2's *merged rows* — not the durable product parquet —
-    so M2's write and the whole of M3 overlap, sharing M2's persisted
-    final frame as the Id↔DescriptionHash mapping."""
+    """etl:168-189 — the three merges in the reference's dependency
+    order.  M1 (providers) and U1 (units) run first, on the driver, from
+    the batch's keys; M2's unit resolution then rides lazily inside its
+    write job.  M3 (provider_products) needs M1's providers and M2's
+    *merged rows* — not the durable product parquet — so M2's write and
+    the whole of M3 run on two threads, sharing M2's persisted final
+    frame as the Id↔DescriptionHash mapping."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_prov = pool.submit(merge_providers, wh, staged.providers)
-        f_units = pool.submit(ensure_units_of_measure, wh, staged.products)
-        f_prep = pool.submit(prepare_product_source, wh, staged.products)
-        providers, units, (src0, touched) = f_prov.result(), f_units.result(), f_prep.result()
-    plan = plan_product_merge(wh, src0, touched)
+    providers = merge_providers(wh, staged.provider_names)
+    units = ensure_units_of_measure(wh, staged.units)
+    plan = plan_product_merge(wh, staged.products, staged.product_buckets)
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_m2 = pool.submit(commit_product_merge, wh, plan)

@@ -36,9 +36,12 @@ BatchGuid) only for a batch whose merge failed.  An empty generation is
 its record alone, not a Spark write job — bootstrapping a warehouse
 launches zero jobs, and reading an empty table yields a local relation
 (which Catalyst folds into trivially-broadcast join sides).  Small
-control tables (lookups, the ProcessFile ledger) are read and written
-on the driver with pyarrow (:meth:`read_local`, :meth:`overwrite_local`)
-and never launch a Spark job.
+unpartitioned tables are read and written on the driver with pyarrow
+(:meth:`read_local`, :meth:`overwrite_local`) and never launch a Spark
+job: the ProcessFile ledger, the seeded lookups (:meth:`seed_rows`),
+and the dimensions the ingest merge extends before its fact writes —
+provider (M1) and unit_of_measure (U1), read together with their
+provider_synonym and unit_of_measure_acronym aliases.
 """
 
 from __future__ import annotations
@@ -422,6 +425,10 @@ class Warehouse:
                 # so dictionary encoding only costs time and bytes (half
                 # the write time of a 100k-row ledger)
                 pq.write_table(df, gen / "part-00000-local.parquet", use_dictionary=False)
+        # a Spark write's _SUCCESS markers go: the record is the commit
+        # marker, and generations hold the same files however written
+        for marker in (*gen.rglob("_SUCCESS"), *gen.rglob("._SUCCESS.crc")):
+            marker.unlink()
         cur = self._current(name)
         if carry is not None and cur is not None:
             for f in cur.rglob("part-*"):
@@ -541,8 +548,11 @@ class Warehouse:
                 if gen.exists():  # staged fully before the commit point
                     self._flip(name, gen, list(entry["old"]), publish=False)
                     repaired.append(name)
-        if repaired:
-            self._publish_root()
+        # publish even when every pointer had already flipped: the crash
+        # may have come between the last flip and the publish, and the
+        # root manifest would then keep naming the pre-transaction
+        # generations
+        self._publish_root()
         path.unlink(missing_ok=True)
         return repaired
 
@@ -665,8 +675,6 @@ class Warehouse:
                 else:
                     df = df.coalesce(target_files)
                 df.write.mode("overwrite").parquet(str(gen / rel))
-                # drop the write's _SUCCESS noise to keep generations uniform
-                (gen / rel / "_SUCCESS").unlink(missing_ok=True)
 
         gen, old = self._stage(
             name, rewrite, spec, rec["meta"], schema=rec["schema"],

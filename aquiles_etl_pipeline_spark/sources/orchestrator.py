@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import ledger
+from ..functions import scalar
+from ..merge.schemas import bucket_of
 from ..merge.upserts import merge_staging_to_fact_tables
 from ..merge.warehouse import Warehouse
 from ..pipeline import (
@@ -82,20 +84,31 @@ def run_pipeline(
     transformed = apply_transformations(df, mode=mode)
     transformed = transformed.cache()
     try:
-        # one job fills the cache and yields every staging count: the
-        # product projections keep every row, the provider one the
-        # distinct non-null names
-        sizes = transformed.agg(
+        # one job fills the cache, counts the rows (the size of both
+        # product projections) and gathers the batch's keys for the
+        # merge: the distinct non-null provider names (collect_set skips
+        # nulls; the provider projection's size) and units that M1 and
+        # U1 look up on the driver, and the product buckets M2 rewrites
+        keys = transformed.agg(
             F.count(F.lit(1)).alias("rows"),
-            F.count_distinct("CleanProviderName").alias("providers"),
+            F.collect_set("CleanProviderName").alias("providers"),
+            F.collect_set(F.lower("UnitOfMeasure")).alias("units"),
+            F.collect_set(
+                bucket_of(scalar.description_hash(F.col("RawDescription")))
+            ).alias("buckets"),
         ).first()
-        n_rows = sizes["rows"]
+        n_rows = keys["rows"]
         if n_rows == 0:
             return None, 0, {}, {}
         batch_guid = str(uuid.uuid4())  # etl:323 — one GUID per file
-        staged = load_data_to_staging_tables(transformed, batch_guid)
+        staged = load_data_to_staging_tables(
+            transformed, batch_guid,
+            provider_names=frozenset(keys["providers"]),
+            units=frozenset(keys["units"]),
+            product_buckets=tuple(sorted(keys["buckets"])),
+        )
         staging_counts = {
-            "providers": sizes["providers"],
+            "providers": len(staged.provider_names),
             "products": n_rows,
             "provider_products": n_rows,
         }

@@ -30,17 +30,35 @@ from ..merge.warehouse import Warehouse
 
 @dataclass(frozen=True)
 class StagedBatch:
-    """One batch's three staging projections, lazy over one frame."""
+    """One batch's three staging projections, lazy over one frame, and
+    the batch's keys the merge needs on the driver, gathered by the
+    ingest chain's one aggregate (sources.orchestrator.run_pipeline):
+
+    - ``provider_names``: the distinct non-null provider names (M1);
+    - ``units``: the distinct non-null lower-cased units (U1);
+    - ``product_buckets``: the sorted fact-table buckets of the staged
+      descriptions, ``bucket_of(description_hash(Description))`` — the
+      product partitions M2 reads and rewrites."""
 
     batch_guid: str
     providers: DataFrame
     products: DataFrame
     provider_products: DataFrame
+    provider_names: frozenset[str]
+    units: frozenset[str]
+    product_buckets: tuple[int, ...]
 
 
-def load_data_to_staging_tables(df: DataFrame, batch_guid: str) -> StagedBatch:
+def load_data_to_staging_tables(
+    df: DataFrame,
+    batch_guid: str,
+    provider_names: frozenset[str],
+    units: frozenset[str],
+    product_buckets: tuple[int, ...],
+) -> StagedBatch:
     """Stamp ``df``'s rows with ``batch_guid`` and split them into the
-    three staging projections.  Builds plans only: no Spark job."""
+    three staging projections, carrying the batch's keys along (see
+    :class:`StagedBatch`).  Builds plans only: no Spark job."""
     guid = F.lit(batch_guid)
 
     # etl:111-122 — distinct non-null CleanProviderName
@@ -73,7 +91,10 @@ def load_data_to_staging_tables(df: DataFrame, batch_guid: str) -> StagedBatch:
         F.col("CleanPrice").cast(DEC).alias("Price"),
         guid.alias("BatchGuid"),
     )
-    return StagedBatch(batch_guid, providers, products, provider_products)
+    return StagedBatch(
+        batch_guid, providers, products, provider_products,
+        provider_names, units, product_buckets,
+    )
 
 
 def write_staging_tables(wh: Warehouse, staged: StagedBatch) -> None:

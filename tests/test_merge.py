@@ -304,6 +304,25 @@ def test_compact_unpartitioned_table(spark, tmp_path):
     assert {tuple(r) for r in wh.read("u").collect()} == before
 
 
+def test_generations_hold_no_success_marker(spark, tmp_path):
+    """A generation's commit marker is its _GEN.json record: no write
+    kind leaves Spark's _SUCCESS marker or its checksum behind, compact
+    included, and history() counts the data files alone."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    df = spark.createDataFrame([(i, f"p{i % 3}") for i in range(9)], "id long, p string")
+    wh.overwrite("t", df.repartition(3), partition_by=["p"])
+    wh.append("t", df.repartition(3), partition_by=["p"])
+    wh.overwrite("u", df.repartition(4))
+    assert wh.compact("t", max_files=4, target_files=1)
+    for table in ("t", "u"):
+        markers = [
+            f for f in (tmp_path / "wh" / table).rglob("*") if "_SUCCESS" in f.name
+        ]
+        assert markers == []
+        cur = wh._current(table)
+        assert wh.history(table)[-1]["n_files"] == len(list(cur.rglob("part-*")))
+
+
 def test_time_travel_read_and_history(spark, tmp_path):
     wh = Warehouse(spark, tmp_path / "tt", keep_generations=4)
     df1 = spark.createDataFrame([(1, "a")], "id int, v string")
@@ -810,6 +829,32 @@ def test_transaction_crash_mid_flip_rolls_forward(spark, tmp_path):
     assert not (tmp_path / "txn" / "_TXN.json").exists()
 
 
+def test_transaction_crash_after_last_flip_republishes(tmp_path):
+    """A transaction that crashed after its last pointer flip but before
+    the root manifest moved: the next attach publishes the manifest, so
+    snapshot() readers see the committed generations.  Driver-side
+    tables, no Spark session."""
+    import json as _json
+
+    import pyarrow as pa
+
+    root = tmp_path / "txn"
+    wh = Warehouse(None, root)
+    for name in ("fact", "rollup"):
+        wh.overwrite_local(name, pa.table({"v": [1]}))
+    staged = {name: wh._stage(name, pa.table({"v": [1, 2]})) for name in ("fact", "rollup")}
+    (root / "_TXN.json").write_text(
+        _json.dumps({n: {"gen": g.name, "old": o} for n, (g, o) in staged.items()})
+    )
+    for name, (gen, old) in staged.items():
+        wh._flip(name, gen, old, publish=False)  # crash here, before the publish
+
+    wh2 = Warehouse(None, root)
+    assert {n: wh2._current(n).name for n in staged} == {"fact": "g1", "rollup": "g1"}
+    assert wh2.snapshot().tables == {"fact": "g1", "rollup": "g1"}
+    assert not (root / "_TXN.json").exists()
+
+
 def test_root_snapshot_pins_transaction_pairs(spark, tmp_path):
     """snapshot() resolves every table through ONE root-manifest read:
     a pair committed by one transaction stays mutually consistent in
@@ -1018,6 +1063,80 @@ def test_ingest_stats_pin_every_count(spark, wh):
     }
     assert wh.read("product").count() == 3
     assert wh.read("provider_product").count() == 4
+
+
+def test_fact_writes_leave_one_file_per_bucket(spark, wh):
+    """Every bucket a fact merge rewrites is one data file.  A
+    re-pricing file whose new products share buckets with re-priced
+    ones (24 of each over 16 buckets) still leaves each rewritten
+    _bucket= directory of product and provider_product holding exactly
+    one part file; the other buckets are carried from the generation
+    before."""
+    header = "Producto,Fecha 1,Provedor,Precio\n"
+
+    def rows(first, last, day):
+        return "".join(
+            f"Articulo {i} {i}00g,{day}/03/2024,Canasta,1.{i:03d}\n" for i in range(first, last)
+        )
+
+    boot = process_csv_file(spark, wh, "c", "boot.csv", csv_text=header + rows(0, 24, 15))
+    assert boot.success, boot.message
+    before = {
+        t: {f.stat().st_ino for f in wh._current(t).rglob("part-*")}
+        for t in ("product", "provider_product")
+    }
+    reprice = process_csv_file(spark, wh, "c", "reprice.csv", csv_text=header + rows(0, 48, 16))
+    assert reprice.success, reprice.message
+    assert reprice.merge_stats["products"] == {"inserted": 24, "total_source": 48}
+    for table, old in before.items():
+        files = list(wh._current(table).rglob("part-*"))
+        written = {f.parent.name for f in files if f.stat().st_ino not in old}
+        assert written and all(d.startswith("_bucket=") for d in written)
+        per_dir = {d: sum(f.parent.name == d for f in files) for d in written}
+        assert per_dir == dict.fromkeys(written, 1), table
+
+
+def test_provider_and_unit_merges_launch_no_job(spark, wh):
+    """M1 and U1 run on the driver: no Spark job, whatever the tables
+    were written by.  M1 matches names exactly against providers and
+    synonyms; U1 matches lower-cased against units and their acronym
+    aliases, non-ASCII included (ÜN is ün).  New Ids continue above the
+    max in key order (code-point order, as Spark sorts strings)."""
+    from conftest import jobs_launched
+
+    from aquiles_etl_pipeline_spark.merge import ensure_units_of_measure, merge_providers
+
+    ts = datetime(2024, 3, 15, 10, 30)
+    wh.overwrite("provider", spark.createDataFrame(
+        [(1, "Canasta", ts), (7, "Beta", ts)], "Id long, Name string, CreateDt timestamp"
+    ))
+    wh.overwrite("provider_synonym", spark.createDataFrame(
+        [(1, "Canast", 1)], "Id long, Synonym string, ProviderId long"
+    ))
+    wh.overwrite("unit_of_measure", spark.createDataFrame(
+        [(1, "g", "gram"), (4, "ÜN", "unidad")], "Id long, Acronym string, Name string"
+    ))
+    wh.overwrite("unit_of_measure_acronym", spark.createDataFrame(
+        [(1, "KGS", 9)], "Id long, Acronym string, UnitOfMeasureId long"
+    ))
+    with jobs_launched(spark) as launched:
+        inserted = merge_providers(
+            wh, ["Zeta", "Canasta", "Ñandú", "Canast", "beta", None, "Alfa"]
+        )
+        created = ensure_units_of_measure(wh, ["ün", "ml", "KGS", "g", "ÜN", None, "lb"])
+        assert merge_providers(wh, ["Alfa", "Zeta"]) == 0
+        assert ensure_units_of_measure(wh, ["ML"]) == 0
+    assert launched.jobs == 0
+    assert (inserted, created) == (4, 2)
+
+    providers = {r["Name"]: r for r in wh.read("provider").collect()}
+    assert {n: r["Id"] for n, r in providers.items()} == {
+        "Canasta": 1, "Beta": 7, "Alfa": 8, "Zeta": 9, "beta": 10, "Ñandú": 11,
+    }
+    assert providers["Canasta"]["CreateDt"] == ts
+    assert all(r["CreateDt"] is not None for r in providers.values())
+    units = {r["Id"]: (r["Acronym"], r["Name"]) for r in wh.read("unit_of_measure").collect()}
+    assert units == {1: ("g", "gram"), 4: ("ÜN", "unidad"), 5: ("lb", "lb"), 6: ("ml", "ml")}
 
 
 def test_generic_merge_into_bucketed_stats(spark, tmp_path):
