@@ -403,14 +403,20 @@ def merge_staging_to_fact_tables(wh: Warehouse, staged: StagedBatch) -> dict[str
     frame as the Id↔DescriptionHash mapping."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target as inherit
+
     providers = merge_providers(wh, staged.provider_names)
     units = ensure_units_of_measure(wh, staged.units)
     plan = plan_product_merge(wh, staged.products, staged.product_buckets)
+    # each thread runs with the caller's job group and local properties
+    # (PySpark pins every Python thread to a JVM thread of its own), one
+    # copy per wrapper: a thread's queries write to theirs while running
     try:
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_m2 = pool.submit(commit_product_merge, wh, plan)
+            f_m2 = pool.submit(inherit(wh.spark)(commit_product_merge), wh, plan)
             f_m3 = pool.submit(
-                merge_provider_products, wh, staged.provider_products, plan.final
+                inherit(wh.spark)(merge_provider_products),
+                wh, staged.provider_products, plan.final,
             )
             products, provider_products = f_m2.result(), f_m3.result()
     finally:

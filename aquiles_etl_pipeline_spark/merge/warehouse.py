@@ -436,6 +436,11 @@ class Warehouse:
                 if carry(rel):
                     (gen / rel).parent.mkdir(parents=True, exist_ok=True)
                     os.link(f, gen / rel)
+                    # a Spark-written file's Hadoop checksum goes with
+                    # it: the read verifies each chunk against it
+                    crc = f.with_name(f".{f.name}.crc")
+                    if crc.exists():
+                        os.link(crc, gen / rel.with_name(crc.name))
         # rows counted from parquet footers, not with a Spark job: an
         # empty frame leaves no data file when partitioned and one
         # footer-only file when not

@@ -83,7 +83,6 @@ def _synth_input(p: DataFrame) -> DataFrame:
 )
 def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..merge import Warehouse, bootstrap
-    from ..session import batch_pipeline_confs
     from ..sources import orchestrator
 
     # repartition: part arrives as one file/partition and the exact-
@@ -92,13 +91,11 @@ def q41(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _synth_input(load(spark, sf_dir, "part")).repartition(par)
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="q41_wh_"))
     bootstrap(wh)
-    # the product's own ingest chain, batch-sized: AQE off + narrow
-    # shuffles (see session.batch_pipeline_confs) — the staging batch is
-    # one file's worth of rows, so job-count, not data, is the cost
-    # driver.  The chain releases its transform cache before returning,
-    # so the readback below depends only on warehouse parquet.
-    with batch_pipeline_confs(spark):
-        orchestrator.run_pipeline(wh, raw)
+    # the product's own ingest chain, called as the CSV path, the
+    # streaming ingest and perfbench call it, under the session's confs.
+    # The chain releases its transform cache before returning, so the
+    # readback below depends only on warehouse parquet.
+    orchestrator.run_pipeline(wh, raw)
 
     pp = wh.read("provider_product").alias("pp")
     prod = wh.read("product").alias("prod")

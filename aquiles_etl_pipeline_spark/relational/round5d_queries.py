@@ -359,22 +359,27 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dependency left between them (doomed_orders is derived above), so
     # they run concurrently — q41's concurrent-flip pattern; the
     # warehouse publish lock serializes only the microseconds of
-    # pointer flips
+    # pointer flips.  Each thread keeps the caller's job group, so its
+    # jobs count as this query's (one properties copy per wrapper, see
+    # merge_staging_to_fact_tables)
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target as inherit
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         fut_c = pool.submit(
-            merge_into, wh, "pii_customer", erase, on="c_custkey",
+            inherit(spark)(merge_into),
+            wh, "pii_customer", erase, on="c_custkey",
             delete_condition=F.lit(True), insert=False, bucket_col="_bucket",
         )
         fut_o = pool.submit(
-            merge_into, wh, "pii_orders",
+            inherit(spark)(merge_into), wh, "pii_orders",
             erase.select(F.col("c_custkey").alias("o_custkey")),
             on="o_custkey",
             delete_condition=F.lit(True), insert=False, bucket_col="_bucket",
         )
         fut_l = pool.submit(
-            merge_into, wh, "fact_lineitem",
+            inherit(spark)(merge_into), wh, "fact_lineitem",
             doomed_orders.select(F.col("o_orderkey").alias("l_orderkey")),
             on="l_orderkey",
             delete_condition=F.lit(True), insert=False, bucket_col="_bucket",

@@ -41,15 +41,10 @@ def session_key(spark: SparkSession) -> str:
 def scoped_confs(spark: SparkSession, confs: dict[str, str]):
     """Temporarily override session confs, restoring on exit.
 
-    Used to scope *batch-sized* pipeline sections (the reference's
-    one-CSV-file merge batches): AQE's per-broadcast job splitting and
-    32-way shuffles are pure scheduler overhead on few-thousand-row
-    frames — q41's merge chain drops 34 → 22 Spark jobs with AQE off,
-    which is what a loaded driver machine actually pays for.  A
-    cluster-scale run over big fact partitions keeps AQE on (the
-    session default).  Not thread-safe across concurrently *planned*
-    queries on the same session — callers are the sequential catalog /
-    bench paths.
+    Used by :func:`stream_batch_confs` to size a stream drain to its
+    input.  Not thread-safe across concurrently *planned* queries on
+    the same session — callers are the sequential catalog / bench
+    paths.
     """
     saved = {k: spark.conf.get(k, None) for k in confs}
     try:
@@ -62,17 +57,6 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def batch_pipeline_confs(spark: SparkSession):
-    """Conf scope for file-sized staging→merge batches (see scoped_confs)."""
-    return scoped_confs(
-        spark,
-        {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "8",
-        },
-    )
 
 
 # input bytes per shuffle partition wherever the count is input-sized
@@ -136,8 +120,8 @@ def stream_batch_confs(
     from input size" rule applied to streams.  AQE is additionally disabled
     inside the scope for the foreachBatch BATCH jobs (rollup merges,
     sink writes): on file-sized batches its per-stage re-planning is
-    pure scheduler overhead (the q41 batch_pipeline_confs finding —
-    34 -> 22 jobs).
+    pure scheduler overhead (each shuffle becomes its own AQE job; the
+    file-sized merge chain once measured 34 -> 22 jobs with AQE off).
 
     Precedence: inside the scope this count wins over the session's
     (launch-fixed, tuned or cores default), which comes back on exit.

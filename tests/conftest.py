@@ -70,17 +70,19 @@ def sf_dir() -> str:
 def jobs_launched(spark):
     """Count the Spark jobs submitted inside the block, from every
     thread: the DAG scheduler's job-id allocator, read before and after
-    (perfbench/spans.py reads it the same way).  ``launched.jobs`` is
-    set when the block exits::
+    (perfbench/spans.py reads it the same way).  ``launched.ids`` (the
+    range of job ids) and ``launched.jobs`` (its length) are set when
+    the block exits::
 
         with jobs_launched(spark) as launched:
             ...
         assert launched.jobs == 0
     """
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    launched = SimpleNamespace(jobs=None)
+    launched = SimpleNamespace(jobs=None, ids=None)
     first = int(dag.nextJobId())
     try:
         yield launched
     finally:
-        launched.jobs = int(dag.nextJobId()) - first
+        launched.ids = range(first, int(dag.nextJobId()))
+        launched.jobs = len(launched.ids)

@@ -63,6 +63,33 @@ def test_csv_end_to_end(spark, wh):
     assert wh.read("staging_provider_product").isEmpty()
 
 
+CSV_IVA = """Producto,Fecha,Provedor,Precio,IVA
+Arroz Premium 500g x 12 (G13),15/03/2024,ProvedorA S.A.S,2.500,13
+Aceite Capullo 500ml,21/04/2025,Canasta,1.347,19
+"""
+
+
+def test_ingest_jobs_keep_the_callers_job_group(spark, wh):
+    """Every job a file's ingest launches, the merge's pool threads
+    included, runs in the caller's job group, so a caller can attribute
+    (or cancel) the whole ingest by its group."""
+    from conftest import jobs_launched
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-under-test", "job group inheritance")
+    try:
+        with jobs_launched(spark) as launched:
+            res = process_csv_text(spark, wh, "c", "grouped.csv", CSV_IVA)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert res.success, res.message
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    grouped = set(sc.statusTracker().getJobIdsForGroup("ingest-under-test"))
+    assert launched.jobs > 0
+    assert set(launched.ids) - grouped == set()
+
+
 @pytest.mark.slow
 def test_ledger_skip_and_idempotent_rerun(spark, wh):
     r1 = process_csv_file(spark, wh, "c", "f.csv", csv_text=CSV)
@@ -1429,6 +1456,32 @@ def test_empty_writes_read_back_empty_with_their_schema(spark, tmp_path, kind):
     assert out.count() == 0
     local = wh.read_local("t")
     assert local.num_rows == 0 and local.schema.names == ["k", "p"]
+
+
+def test_carried_files_keep_their_checksums(spark, tmp_path):
+    """A data file hardlinked forward from an untouched partition keeps
+    its Hadoop checksum sidecar, so reads still verify it: a flipped
+    byte fails the read with a ChecksumException instead of decoding
+    whatever the page now holds."""
+    wh = Warehouse(spark, tmp_path / "wh")
+    _write(spark, wh, "overwrite", [(1, "a"), (2, "b")], ["p"])
+    _write(spark, wh, "replace_partitions", [(3, "a")])
+    (carried,) = (wh._current("t") / "p=b").glob("part-*")
+    assert carried.stat().st_nlink == 2  # carried, not rewritten
+    data = bytearray(carried.read_bytes())
+    data[4] ^= 0xFF  # the first page, just past the PAR1 magic
+    carried.write_bytes(bytes(data))
+
+    from py4j.protocol import Py4JJavaError
+
+    with pytest.raises(Py4JJavaError) as caught:
+        wh.read("t").collect()
+    causes = []
+    err = caught.value.java_exception
+    while err is not None:
+        causes.append(err.getClass().getName())
+        err = err.getCause()
+    assert "org.apache.hadoop.fs.ChecksumException" in causes, causes
 
 
 def test_generation_without_record_is_refused(spark, tmp_path):
